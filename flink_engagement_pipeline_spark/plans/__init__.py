@@ -271,12 +271,12 @@ from . import queries_ext10  # noqa: F401,E402
 #       docs_training_manifest + docs_epoch_order — expression-level
 #       change, skeleton identical, __pid assignments differ so the
 #       external gate re-proves the values).
-#       Later r15 commit batches grow [b] by 10: the single-split
+#       Later r15 commit batches grow [b] by 9: the single-split
 #       fan_out fix (media pHash trio — moved up from [c] — and the
 #       video trio; mechanical skeleton diff, then the inline-explode
 #       + index-checkpoint fixes ride the same six slots), the
 #       semdedup screen's fan_out-before-checkpoint
-#       (embedding_semdedup + _ingest + _delete — value path changed
+#       (embedding_semdedup + _delete — value path changed
 #       behind the checkpoint, skeleton identical, re-entered under
 #       the hex-prefix precedent; the semdedup/video/phash streaming
 #       replays are deliberately untouched and stay deferred —

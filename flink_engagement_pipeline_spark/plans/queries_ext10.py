@@ -527,12 +527,12 @@ def q_embedding_pq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import InheritableThread
 
     with pq.wholestage_off(spark):
-        errs: list[BaseException] = []
+        errs: list[Exception] = []
 
         def _w(codes: DataFrame, bid: int) -> None:
             try:
                 sink.write_batch(codes.withColumn("op", F.lit(1)), bid)
-            except BaseException as ex:  # noqa: BLE001 — re-raised below
+            except Exception as ex:  # noqa: BLE001 — re-raised below
                 errs.append(ex)
 
         threads = [
@@ -547,8 +547,10 @@ def q_embedding_pq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             t.start()
         for t in threads:
             t.join()
-        if errs:
+        if len(errs) == 1:
             raise errs[0]
+        if errs:
+            raise ExceptionGroup("embedding_pq_ingest code writes failed", errs)
     return pq_codes_live(spark, tmp)
 
 

@@ -11,6 +11,7 @@ import os
 import re
 import tempfile
 
+import pytest
 from pyspark.sql import functions as F
 
 from flink_engagement_pipeline_spark.llm import lexical as lx
@@ -47,6 +48,29 @@ def test_pq_ingest_append_equals_rebuild(spark, sf_dir):
     served = _rows(REGISTRY["embedding_pq_ingest"].spark(spark, sf_dir))
     rebuild = _rows(pq.encode_codes(emb, books, coarse))
     assert served == rebuild
+
+
+def test_pq_ingest_reports_every_write_failure(spark, sf_dir, monkeypatch):
+    """The corpus and batch code writes run as concurrent driver jobs:
+    one failure is raised unchanged, and when both fail every failure
+    is raised (as an ExceptionGroup), not only the first."""
+    failing: set[int] = set()
+
+    def write_batch(self, df, batch_id):
+        if batch_id in failing:
+            raise RuntimeError(f"write {batch_id} failed")
+
+    monkeypatch.setattr(IdempotentParquetSink, "write_batch", write_batch)
+    failing.add(1)
+    with pytest.raises(RuntimeError, match="write 1 failed"):
+        REGISTRY["embedding_pq_ingest"].spark(spark, sf_dir)
+    failing.add(0)
+    with pytest.raises(ExceptionGroup) as group:
+        REGISTRY["embedding_pq_ingest"].spark(spark, sf_dir)
+    assert sorted(str(e) for e in group.value.exceptions) == [
+        "write 0 failed",
+        "write 1 failed",
+    ]
 
 
 def test_pq_delete_equals_rebuild_without_x(spark, sf_dir):

@@ -2,8 +2,10 @@
 
 Each assertion pins a plan property that must survive refactoring:
 filters pushed into the parquet scan, small dimensions broadcast,
-top-k compiled to TakeOrderedAndProject (no global sort), pruned read
-schemas, and no Python row-at-a-time evaluation in declared queries.
+top-k compiled to TakeOrderedAndProject (no global sort) and pruned
+read schemas. The registry-wide bans (no row-at-a-time Python, no
+CartesianProduct, BroadcastNestedLoopJoin only on an allowlist) run in
+tests/test_registry_oracle.py on each query's own executed plan.
 """
 
 from __future__ import annotations
@@ -59,18 +61,11 @@ def test_hop_is_single_shuffle_two_phase(spark, sf_dir):
     # (Generate) and both aggregations are partition-local — the
     # multiplied rows never cross the wire
     assert plan.count("Exchange") == 1
+    assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "Generate explode" in plan
     # pre-aggregation happens before the explode: an aggregate appears
     # below Generate in the tree
     assert "HashAggregate" in plan[plan.index("Generate"):]
-
-
-def test_no_python_udfs_in_declared_queries(spark, sf_dir):
-    """Row-at-a-time Python is banned from the hot path; the only
-    Python boundary allowed is Arrow-batched mapInPandas."""
-    for name, spec in REGISTRY.items():
-        plan = _plan(spark, sf_dir, name)
-        assert "BatchEvalPython" not in plan, f"{name} uses a row-at-a-time UDF"
 
 
 def test_cdc_roundtrip_delete_resurrect(spark):
@@ -202,50 +197,6 @@ def test_catalog_ddl_ctas_roundtrip(spark, sf_dir, tmp_path):
     spark.sql("INSERT INTO engagement_rollup SELECT 'synthetic', 1")
     assert spark.table("engagement_rollup").count() == n_types + 1
     spark.sql("DROP TABLE engagement_rollup")
-
-
-def test_hop_single_exchange(spark, sf_dir):
-    """The sliding-window agg must keep its ONE pre-explode shuffle:
-    Exchange appears exactly once (plus AQE read nodes), and the 120x
-    explode runs after it — the property that makes the plan survive
-    100 TB. A regression to F.window-style Expand would add a
-    post-explode exchange."""
-    plan = _plan(spark, sf_dir, "hop_engagement_sum")
-    assert plan.count("Exchange hashpartitioning") == 1, plan
-
-
-def test_bucketed_join_avoids_shuffle(spark, sf_dir, tmp_path):
-    """Bucketing co-locates join keys at write time: two tables
-    bucketed by the join key join with NO Exchange in the plan — the
-    write-once-join-many pattern that removes the dominant shuffle for
-    repeated fact-fact joins at 100 TB."""
-    from pyspark.sql import functions as F
-
-    from flink_engagement_pipeline_spark.sources.tables import load_table
-
-    spark.sql("DROP TABLE IF EXISTS ev_b")
-    spark.sql("DROP TABLE IF EXISTS ord_b")
-    load_table(spark, sf_dir, "events").select("event_id", "user_id", "value") \
-        .write.bucketBy(8, "user_id").sortBy("user_id") \
-        .option("path", str(tmp_path / "ev_b")).saveAsTable("ev_b")
-    load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey") \
-        .write.bucketBy(8, "o_custkey").sortBy("o_custkey") \
-        .option("path", str(tmp_path / "ord_b")).saveAsTable("ord_b")
-    # disable broadcast so the join strategy decision is about shuffle
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("ev_b").join(
-            spark.table("ord_b"),
-            F.col("user_id") == F.col("o_custkey"),
-        )
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, plan
-        assert j.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS ev_b")
-        spark.sql("DROP TABLE IF EXISTS ord_b")
 
 
 def test_returned_item_customers_plan(spark, sf_dir):
@@ -1144,74 +1095,6 @@ def test_lone_late_suppliers_all_equi_joins(spark, sf_dir):
     assert "LeftAnti" in plan
 
 
-def test_no_query_plans_a_cartesian_product(spark, sf_dir):
-    """Registry-wide scale audit: no registered query may plan a
-    CartesianProduct — the operator that turns a 100 TB input into a
-    non-terminating job. BroadcastNestedLoopJoin is tolerated only on
-    an explicit allowlist of single-row / broadcast-tiny patterns
-    (scalar-count cross joins, gap-fill spines, the one-probe ANN
-    baseline); growing that list is a deliberate act, not drift."""
-    bnlj_allowed = {
-        "conversion_funnel",        # two 1-row scalar-count cross joins
-        "minute_rollup_gapfill",    # broadcast minute-spine x type dim
-        "embedding_cosine_topk",    # single probe row x corpus (baseline)
-        "embedding_near_dup",       # broadcast threshold pattern
-        "embedding_ann_lsh",        # single probe row x bucket-pruned candidates
-        "embedding_ann_ivf",        # single probe row x probed inverted lists
-        "embedding_knn_join",       # broadcast Q-row probe batch x corpus
-        "embedding_range_search",   # broadcast Q-row probe batch x corpus
-        "docs_bm25",                # 1-row corpus-stats broadcast x docs
-        "docs_unigram_logprob",     # 1-row token-total broadcast x vocab
-        "docs_pmi_bigrams",         # 1-row corpus-totals broadcast x pairs
-        "docs_quality_gate",        # 1-row percentile-threshold broadcast
-        "embedding_ann_recall",     # composes the allowlisted 1-probe topks
-        "docs_bigram_logprob",      # 1-row vocab-size broadcast x model
-        "docs_bpe_perplexity",      # 1-row vocab-size broadcast x model (id LM)
-        "embedding_matryoshka_rerank",  # single probe row x corpus (coarse)
-        "audience_overlap",         # 1-row sketch-estimates x 1-row exacts
-        "embedding_mmr_rerank",     # single probe row x corpus (pool build)
-        "embedding_mmr_batch",      # broadcast 4-row probe batch x corpus
-        "docs_hybrid_retrieval",    # composes the BM25 index serve's
-                                    # 1-row broadcasts (below)
-        "docs_hybrid_retrieval_batch",  # same stats broadcast + the
-                                    # knn_join probe-batch pattern
-        # the BM25 index serve (lexical.bm25_serve): TWO 1-row
-        # broadcasts — per-term df aggregate of the term-pruned
-        # postings slice, and the summed (n_docs, avgdl) stats row —
-        # the docs_bm25 pattern served from persisted state
-        "docs_bm25_from_index",
-        "docs_bm25_ingest",
-        "docs_bm25_delete",
-        "stream_bm25_index_replay",
-        "docs_hybrid_retrieval_ivf",  # BM25-index broadcasts + the
-                                      # single-probe-row query x
-                                      # probed-lists candidates
-        # round-13 additions — each composes patterns already on this
-        # list; the batch-ivf plan pin additionally asserts NO BNLJ
-        # touches the embeddings scan (the brute-dense signature)
-        "docs_bm25_compact",          # the BM25 index serve's two
-                                      # 1-row broadcasts, over the
-                                      # compact= snapshot
-        "docs_hybrid_retrieval_batch_ivf",  # BM25-index stats
-                                      # broadcast (lexical stage only;
-                                      # dense side is all equi-joins)
-        "embedding_ivf_recall",       # composes embedding_cosine_topk
-                                      # + the state-served single-
-                                      # probe-row IVF serve
-        "embedding_ivf_pq_recall",    # composes embedding_cosine_topk
-                                      # + the probed ADC serve
-    }
-    cartesian, stray_bnlj = [], []
-    for name, spec in sorted(REGISTRY.items()):
-        plan = spec.spark(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
-        if "CartesianProduct" in plan:
-            cartesian.append(name)
-        if "BroadcastNestedLoopJoin" in plan and name not in bnlj_allowed:
-            stray_bnlj.append(name)
-    assert not cartesian, f"CartesianProduct in: {cartesian}"
-    assert not stray_bnlj, f"unexpected BroadcastNestedLoopJoin in: {stray_bnlj}"
-
-
 def test_datagen_domains_and_determinism(spark):
     """§3.3 workload generator: reference value domains (datagen.py
     55-59 / init.sql CHECK constraints) and bit-identical
@@ -1266,65 +1149,6 @@ def test_datagen_rate_exact_no_drift(spark):
         dg.gen_events(spark, 10, events_per_second=2_000_000)
     with _pytest.raises(ValueError, match="events_per_second"):
         dg.gen_events(spark, 10, events_per_second=0)
-
-
-def test_bucketed_join_needs_no_exchange(spark, sf_dir, tmp_path):
-    """Bucketing is the co-located-join primitive at 100 TB: write
-    both sides bucketed by the join key (same bucket count), and the
-    sort-merge join reads bucket i against bucket i with NO Exchange
-    under the join — the shuffle is paid once at write time, then
-    every subsequent join of the two tables is shuffle-free. The only
-    Exchange left in the plan belongs to the downstream aggregation.
-    Result equality vs the plain join is asserted value-for-value."""
-    from pyspark.sql import functions as F
-
-    from flink_engagement_pipeline_spark.functions.exact import dec
-    from flink_engagement_pipeline_spark.sources.tables import load_table
-
-    events = load_table(spark, sf_dir, "events")
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_mktsegment"
-    )
-    spark.sql("DROP TABLE IF EXISTS evt_bkt")
-    spark.sql("DROP TABLE IF EXISTS cust_bkt")
-    (events.select("event_id", "user_id", "value")
-     .write.bucketBy(8, "user_id").sortBy("user_id")
-     .option("path", str(tmp_path / "evt_bkt"))
-     .mode("overwrite").saveAsTable("evt_bkt"))
-    (cust.write.bucketBy(8, "c_custkey").sortBy("c_custkey")
-     .option("path", str(tmp_path / "cust_bkt"))
-     .mode("overwrite").saveAsTable("cust_bkt"))
-    try:
-        e = spark.table("evt_bkt")
-        c = spark.table("cust_bkt")
-        joined = e.hint("merge").join(
-            c, e["user_id"] == c["c_custkey"]
-        ).groupBy("c_mktsegment").agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(dec("value")).cast("double").alias("total_value"),
-        )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan, plan[:2000]
-        # the join itself is exchange-free: the only Exchange is the
-        # aggregation's, ABOVE the join in the tree (appears before
-        # SortMergeJoin in the printed plan, never below it)
-        below_join = plan[plan.index("SortMergeJoin"):]
-        assert "Exchange" not in below_join, below_join[:2000]
-        expect = sorted(
-            map(tuple, events.join(
-                cust, events["user_id"] == cust["c_custkey"]
-            ).groupBy("c_mktsegment").agg(
-                F.count(F.lit(1)).alias("n_events"),
-                F.sum(dec("value")).cast("double").alias("total_value"),
-            ).collect())
-        )
-        got = sorted(map(tuple, joined.collect()))
-        assert got == expect and len(got) > 0
-    finally:
-        spark.sql("DROP TABLE IF EXISTS evt_bkt")
-        spark.sql("DROP TABLE IF EXISTS cust_bkt")
-
-
 
 
 def test_python_datasource_batch_and_stream(spark, tmp_path):

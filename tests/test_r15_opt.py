@@ -298,10 +298,13 @@ def test_media_pair_builds_checkpoint_index_once(spark, sf_dir):
     index before the multi-reference serving tail (exchange reuse does
     not unify the references — 0 ReusedExchange measured, the lambda
     functions defeat plan canonicalization). Pin: the built plans read
-    the index from a checkpoint scan (ExistingRDD/LogicalRDD), and the
-    pair outputs equal the tail applied to the raw (uncheckpointed)
-    index. (The checkpoint surfaces as a LogicalRDD leaf in the
-    optimized plan.)"""
+    the index from a checkpoint scan — a LogicalRDD leaf in the
+    optimized plan whose columns are exactly the bucket index's, so a
+    checkpoint of any other frame cannot satisfy it — and the pair
+    outputs equal the tail applied to the raw (uncheckpointed)
+    index."""
+    import re
+
     from flink_engagement_pipeline_spark.llm import multimodal as lm
     from flink_engagement_pipeline_spark.operators.util import fan_out
     from flink_engagement_pipeline_spark.sources.tables import load_table
@@ -309,19 +312,24 @@ def test_media_pair_builds_checkpoint_index_once(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     media = fan_out(lm.docs_as_media(docs))
 
-    for built, raw in [
+    for built, index, serve in [
         (
             lm.media_phash_pairs(media),
-            lm.media_phash_pairs_from_index(lm.media_phash_buckets(media)),
+            lm.media_phash_buckets(media),
+            lm.media_phash_pairs_from_index,
         ),
         (
             lm.media_video_neardup(media),
-            lm.media_video_pairs_from_index(lm.video_frame_buckets(media)),
+            lm.video_frame_buckets(media),
+            lm.media_video_pairs_from_index,
         ),
     ]:
-        assert (
-            "LogicalRDD"
-            in built._jdf.queryExecution().optimizedPlan().toString()
-        )
+        plan = built._jdf.queryExecution().optimizedPlan().toString()
+        leaves = [
+            re.findall(r"(\w+)#\d+", cols)
+            for cols in re.findall(r"LogicalRDD \[([^\]]*)\]", plan)
+        ]
+        assert index.columns in leaves, (index.columns, leaves)
+        raw = serve(index)
         assert built.exceptAll(raw).count() == 0
         assert raw.exceptAll(built).count() == 0

@@ -1,7 +1,8 @@
 #!/usr/bin/env python
-"""Dump .explain('formatted') for registered queries to plans/r14/
-(the optimization round's evidence files). Usage:
-    python tools/dump_plan_r14.py <suffix> <query> [<query> ...]
+"""Dump .explain('formatted') for registered queries to plans/<round>/
+(default r15; env DUMP_ROUND/DUMP_OUT) — an optimization's before/after
+plan evidence. Usage:
+    python tools/dump_plan.py <suffix> <query> [<query> ...]
 suffix is 'before' or 'after'."""
 
 from __future__ import annotations
@@ -14,8 +15,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from flink_engagement_pipeline_spark import plans  # noqa: E402
 from flink_engagement_pipeline_spark.session import get_spark  # noqa: E402
 
-OUT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-                   "plans", "r14")
+OUT = os.environ.get("DUMP_OUT") or os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "plans", os.environ.get("DUMP_ROUND", "r15"))
 
 
 def main():
