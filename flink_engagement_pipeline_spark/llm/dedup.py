@@ -833,15 +833,12 @@ def simhash(docs: DataFrame) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-def _cc_driver_gate_default() -> int:
-    """Edge-count ceiling for the driver-side small-graph closure,
-    env-overridable (``SPARK_GRAFT_CC_DRIVER_MAX_EDGES``; 0 disables).
-    100k edges is a few MB collected — strictly metadata-class, far
-    under any driver budget — while a 100 TB near-dup pair set is
-    orders of magnitude past it and takes the distributed loop."""
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES", "100000"))
+# Edge-count ceiling for the driver-side small-graph closure. 100k
+# edges is a few MB collected — strictly metadata-class, far under any
+# driver budget — while a 100 TB near-dup pair set is orders of
+# magnitude past it and takes the distributed loop. A constant, not an
+# environment setting, so no deployment can enlarge the collect.
+CC_DRIVER_MAX_EDGES = 100_000
 
 
 def _cc_labels_driver(edges: DataFrame, roster: DataFrame) -> DataFrame:
@@ -927,7 +924,7 @@ def connected_components(
     join + aggregation + checkpoint + driver action. When the exact
     edge count (one metadata job over the already-checkpointed edge
     blocks) is at or below ``driver_max_edges`` (default
-    ``_cc_driver_gate_default()`` — env-tunable, a few MB collected),
+    ``CC_DRIVER_MAX_EDGES`` — a few MB collected),
     the closure runs as driver-side union-find over the collected
     edge list: output-identical by construction (union-by-min == the
     loop's min-label fixpoint on the same roster-induced subgraph;
@@ -948,11 +945,7 @@ def connected_components(
         .distinct()
         .join(all_ids.select("doc_id"), "doc_id", "leftsemi")
     )
-    gate = (
-        _cc_driver_gate_default()
-        if driver_max_edges is None
-        else driver_max_edges
-    )
+    gate = CC_DRIVER_MAX_EDGES if driver_max_edges is None else driver_max_edges
     # one metadata job; materializes the pairs pipeline exactly once
     # (the checkpoint the first loop round would otherwise materialize)
     if edges.count() <= gate:

@@ -396,7 +396,17 @@ def media_phash_pairs(
     shingle build's lambda functions defeat plan canonicalization),
     so the whole signature pipeline executed twice per build.
     Measured 1.49 -> 1.27 s at sf0.1; narrow 4-column index rows, the
-    CC-edges checkpoint convention, no cross-run memo."""
+    CC-edges checkpoint convention, no cross-run memo.
+
+    Block lifetime: the checkpoint blocks sit in executor block
+    storage (memory and local disk) from the first action until the
+    returned frame, and every frame built on it, is unreachable from
+    Python and the JVM. Spark's ContextCleaner then removes them after
+    the next JVM GC (it forces one every
+    ``spark.cleaner.periodicGC.interval``, 30 min by default), or at
+    SparkContext stop. They are not a reliable store: an executor loss
+    loses them, and a job that still reads them fails with
+    "Checkpoint block ... not found" instead of recomputing."""
     return media_phash_pairs_from_index(
         media_phash_buckets(media, rotations).localCheckpoint(
             eager=False
@@ -885,7 +895,10 @@ def media_video_neardup(
     defeat canonicalization), so the factored frame hasher still
     executed per reference. Measured 2.44 -> 2.07 s at sf0.1; narrow
     index rows, the CC-edges checkpoint convention, no cross-run
-    memo."""
+    memo. Block lifetime and executor-loss behaviour are as in
+    :func:`media_phash_pairs`: released by the ContextCleaner once
+    the frame is unreachable, lost (and fatal to a job still reading
+    them) on executor loss."""
     return media_video_pairs_from_index(
         video_frame_buckets(media, every_k).localCheckpoint(
             eager=False

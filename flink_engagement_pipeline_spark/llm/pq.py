@@ -366,19 +366,9 @@ def wholestage_off(spark):
     compile in seconds. Extracted from ``encoded_table`` so the
     lifecycle cells (plans/queries_ext10) write their code deltas under
     the same discipline."""
-    from contextlib import contextmanager
+    from ..session import pinned_conf
 
-    @contextmanager
-    def _ctx():
-        key = "spark.sql.codegen.wholeStage"
-        saved = spark.conf.get(key)
-        spark.conf.set(key, "false")
-        try:
-            yield
-        finally:
-            spark.conf.set(key, saved)
-
-    return _ctx()
+    return pinned_conf(spark, "spark.sql.codegen.wholeStage", "false")
 
 
 def encode_codes(

@@ -67,11 +67,21 @@ def hex_prefix_pid(col: str, n_parts: int) -> Column:
     numbering device needs from a range id — offsets always come from
     the actual per-range counts, so values are unconditionally
     identical to the sampled form. NULL keys map to range 0,
-    consistent with nulls-first ascending order."""
+    consistent with nulls-first ascending order. Any other key whose
+    first 4 chars are not lowercase hex digits fails the query
+    (``raise_error``): ``conv`` would read 'ZZZZ' as 0 and '12zz' as
+    0x12, silently breaking the monotone order."""
+    prefix = f"substring({col}, 1, 4)"
+    # the outer coalesce keeps the id non-nullable, so joins on it
+    # infer no extra IsNotNull filter
     return F.coalesce(
         F.expr(
-            f"cast(cast(conv(substring({col}, 1, 4), 16, 10) as bigint)"
+            f"CASE WHEN {prefix} RLIKE '^[0-9a-f]{{4}}$'"
+            f" THEN cast(cast(conv({prefix}, 16, 10) as bigint)"
             f" * {n_parts} div 65536 as int)"
+            f" WHEN {col} IS NOT NULL THEN raise_error(concat("
+            f"'hex_prefix_pid: key ', {col},"
+            f" ' does not start with 4 lowercase hex digits')) END"
         ),
         F.lit(0),
     )

@@ -121,14 +121,14 @@ WITH {_hybrid_batch_lex_ctes()},
 {_hybrid_batch_fuse_sql()}"""
 
 
-def _probe_spark_min_nq() -> int:
-    """Batch-size gate for Spark-side probe selection (env-tunable):
-    below it the nq-vector collect + Python centroid ranking is
-    driver metadata (the declared nq=4 shape); at/above it the same
-    ranking runs as ONE parsed projection over the query vectors so
-    a 10k-query batch never pays O(nq·k·dim) driver Python (r13
-    advisory #2 / r14 verdict next-item #3)."""
-    return int(os.environ.get("SPARK_GRAFT_IVF_SPARK_PROBE_MIN_NQ", "64"))
+# Batch-size gate for Spark-side probe selection: below it the
+# nq-vector collect + Python centroid ranking is driver metadata (the
+# declared nq=4 shape); at/above it the same ranking runs as ONE parsed
+# projection over the query vectors so a 10k-query batch never pays
+# O(nq·k·dim) driver Python (r13 advisory #2 / r14 verdict next-item
+# #3). A constant, not an environment setting, so no deployment can
+# enlarge the collect.
+IVF_SPARK_PROBE_MIN_NQ = 64
 
 
 def _probe_pairs_spark(
@@ -208,7 +208,7 @@ def ivf_batch_topk_from_state(
     )
     cents = _centroids(emb)
     gate = (
-        _probe_spark_min_nq()
+        IVF_SPARK_PROBE_MIN_NQ
         if spark_probe_min_nq is None
         else spark_probe_min_nq
     )

@@ -901,6 +901,7 @@ def q_stream_cep_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         match_pattern_incremental,
         state_schema_cols,
     )
+    from ..streaming.pipeline import replay_width, run_stream
     from ..streaming.sinks import IdempotentParquetSink
 
     tmp = tempfile.mkdtemp(prefix="stream_cep_")
@@ -924,20 +925,11 @@ def q_stream_cep_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     match_sink = IdempotentParquetSink(os.path.join(tmp, "matches"))
     state_sink = IdempotentParquetSink(os.path.join(tmp, "state"))
 
-    def _committed(sink, below=None):
-        out = []
-        for m in glob.glob(os.path.join(sink.out_dir, "*", "_COMMITTED")):
-            d = os.path.dirname(m)
-            bid = int(os.path.basename(d).split("=")[1])
-            if below is None or bid < below:
-                out.append((bid, d))
-        return sorted(out)
-
     def apply(df, bid):
-        prev = _committed(state_sink, below=bid)
+        prev = state_sink.committed_paths(below=bid)
         state = (
             spark.read.option("pathGlobFilter", "*.parquet")
-            .parquet(prev[-1][1])
+            .parquet(prev[-1])
             .select("user_id", *state_schema_cols(_CEP_VCP))
             if prev
             else None
@@ -961,27 +953,15 @@ def q_stream_cep_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         match_sink.write_batch(matches, bid)
         state_sink.write_batch(new_state, bid)
 
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
-        stream = (
-            spark.readStream.schema(prep.schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(events_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(part_key, saved)
-    dirs = [d for _, d in _committed(match_sink)]
-    matches = spark.read.option("pathGlobFilter", "*.parquet").parquet(*dirs)
+    stream = (
+        spark.readStream.schema(prep.schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(events_dir)
+    )
+    with replay_width(spark):
+        run_stream(stream, apply, os.path.join(tmp, "ckpt"))
+    matches = match_sink.read_committed(spark)
     return matches.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_conversions"),
         F.min("latency").alias("min_latency_us"),

@@ -27,6 +27,7 @@ from ..llm import multimodal as lm
 from ..llm import similarity as ls
 from ..operators.util import fan_out
 from ..sources.tables import load_table
+from ..streaming.pipeline import replay_width, run_stream, stage_replay_dir
 from ..streaming.sinks import IdempotentParquetSink
 from .registry import register
 
@@ -55,36 +56,14 @@ def _parity_replay(
     parameterizes the round-9 documents-only harness on (table,
     schema) so the embeddings fixture replays through the identical
     device."""
-    data_dir = os.path.join(tmp, table)
-    os.makedirs(data_dir)
-    src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
-    os.symlink(src, os.path.join(data_dir, "a.parquet"))
-    os.symlink(src, os.path.join(data_dir, "b.parquet"))
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
-        stream = (
-            spark.readStream.schema(schema)
-            .option("pathGlobFilter", "*.parquet")
-            .option("maxFilesPerTrigger", "1")
-            .parquet(data_dir)
-        )
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(part_key, saved)
-
-
-def _parity_docs_replay(spark: SparkSession, sf_dir: str, tmp: str, apply):
-    """Documents instance of :func:`_parity_replay` (round-9 name,
-    kept for the three text/media replays and their tests)."""
-    _parity_replay(spark, sf_dir, tmp, apply)
+    stream = (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", "1")
+        .parquet(stage_replay_dir(sf_dir, tmp, table))
+    )
+    with replay_width(spark):
+        run_stream(stream, apply, os.path.join(tmp, "ckpt"))
 
 
 def run_minhash_index_replay(
@@ -151,7 +130,7 @@ def run_minhash_index_replay(
         )
         pairs_sink.write_batch(new_pairs, bid)
 
-    _parity_docs_replay(spark, sf_dir, tmp, apply)
+    _parity_replay(spark, sf_dir, tmp, apply)
     return pairs_sink.read_committed(spark).select(
         "doc_a", "doc_b", "jaccard"
     )
@@ -235,7 +214,7 @@ def run_simhash_index_replay(
         index_sink.write_batch(batch_idx, bid)
         pairs_sink.write_batch(new_pairs, bid)
 
-    _parity_docs_replay(spark, sf_dir, tmp, apply)
+    _parity_replay(spark, sf_dir, tmp, apply)
     return pairs_sink.read_committed(spark).select(
         "doc_a", "doc_b", "hamming"
     )
@@ -542,7 +521,7 @@ def run_media_phash_index_replay(
         index_sink.write_batch(batch_idx, bid)
         pairs_sink.write_batch(new_pairs, bid)
 
-    _parity_docs_replay(spark, sf_dir, tmp, apply)
+    _parity_replay(spark, sf_dir, tmp, apply)
     return pairs_sink.read_committed(spark).select(
         "doc_a", "doc_b", "hamming"
     )

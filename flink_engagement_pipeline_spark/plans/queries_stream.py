@@ -23,11 +23,15 @@ from .queries_ext4 import RETRACT_FINAL_ORACLE
 from ..sources.datagen import gen_events
 from ..sources.tables import load_table
 from ..streaming.pipeline import (
+    read_events_stream,
+    replay_width,
     run_abandoned_clicks,
     run_enriched_fanout,
     run_session_windowed,
+    run_stream,
     run_stream_stream_join,
     run_windowed,
+    stage_replay_dir,
 )
 from ..streaming.sinks import IdempotentParquetSink
 from .registry import register
@@ -77,23 +81,10 @@ LEFT JOIN customer c ON e.user_id = c.c_custkey
 )
 def q_stream_replay_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="stream_replay_")  # outlives the returned plan
-    events_dir = os.path.join(tmp, "events")
-    os.makedirs(events_dir)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     # the same fixture file twice = a full replay of every key in batch 2
-    os.symlink(src, os.path.join(events_dir, "a.parquet"))
-    os.symlink(src, os.path.join(events_dir, "b.parquet"))
+    events_dir = stage_replay_dir(sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
-    # The stateful dedup allocates one state store per shuffle
-    # partition per micro-batch: a vanilla driver session's 200
-    # partitions cost ~15 s of store setup for a fixture-sized batch.
-    # Pin a fixture-appropriate width for the streaming run only and
-    # restore the caller's conf after (the checkpoint is fresh per
-    # invocation, so the locked-in state width never conflicts).
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
+    with replay_width(spark):
         run_enriched_fanout(
             spark,
             events_dir,
@@ -103,8 +94,6 @@ def q_stream_replay_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
             cross_batch_dedup=True,
             max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(part_key, saved)
     committed = sink.read_committed(spark)
     # forced redelivery: a batch id whose marker exists must be a no-op
     sink.write_batch(committed.limit(5), 0)
@@ -149,10 +138,7 @@ def q_stream_windowed_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="stream_win_")  # outlives the returned plan
     events_dir = _sentinel_replay_dir(spark, sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
+    with replay_width(spark):
         run_windowed(
             spark,
             events_dir,
@@ -160,8 +146,6 @@ def q_stream_windowed_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint_dir=os.path.join(tmp, "ckpt"),
             max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(part_key, saved)
     return sink.read_committed(spark)
 
 
@@ -223,10 +207,7 @@ def q_stream_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.copy(src, late)
     os.utime(late, (now + 120, now + 120))
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
+    with replay_width(spark):
         run_windowed(
             spark,
             events_dir,
@@ -234,8 +215,6 @@ def q_stream_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             checkpoint_dir=os.path.join(tmp, "ckpt"),
             max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(part_key, saved)
     return sink.read_committed(spark)
 
 
@@ -244,12 +223,10 @@ def _sentinel_replay_dir(spark: SparkSession, sf_dir: str, tmp: str) -> str:
     sentinel event 20 minutes past max(ts). The sentinel advances the
     watermark past every real window/session end; its own window never
     closes, so it never appears in append-mode output."""
-    events_dir = os.path.join(tmp, "events")
-    os.makedirs(events_dir)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     # batch 1: the fixture (symlink keeps the fixture file's older
     # mtime, so the file source orders it before the sentinel)
-    os.symlink(src, os.path.join(events_dir, "a.parquet"))
+    events_dir = stage_replay_dir(sf_dir, tmp, copies=1)
+    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     # batch 2: the sentinel. It must carry the SAME physical ts unit
     # as the fixture (the driver has shipped both NANOS and MICROS
     # units across rounds). Built as a JVM-side range(1) projection:
@@ -326,20 +303,12 @@ JOIN events p
 )
 def q_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="stream_ssj_")  # outlives the returned plan
-    events_dir = os.path.join(tmp, "events")
-    os.makedirs(events_dir)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    os.symlink(src, os.path.join(events_dir, "a.parquet"))
+    events_dir = stage_replay_dir(sf_dir, tmp, copies=1)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
+    with replay_width(spark):
         run_stream_stream_join(
             spark, events_dir, sink, checkpoint_dir=os.path.join(tmp, "ckpt")
         )
-    finally:
-        spark.conf.set(part_key, saved)
     return sink.read_committed(spark)
 
 
@@ -421,10 +390,8 @@ def _staged_sentinel_drain_dir(
 
     from ..sources.tables import events_ts_is_nanos
 
-    events_dir = os.path.join(tmp, "events")
-    os.makedirs(events_dir)
+    events_dir = stage_replay_dir(sf_dir, tmp, copies=1)
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    os.symlink(src, os.path.join(events_dir, "a.parquet"))
     ev = load_table(spark, sf_dir, "events")
     max_us = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
     late_us = max_us + late_minutes * 60 * 1_000_000
@@ -481,10 +448,7 @@ def _run_outer_join_replay(
         spark, sf_dir, tmp, ((-1, -1, "click"), (-2, -2, "purchase"))
     )
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
+    with replay_width(spark):
         run_stream_stream_join(
             spark,
             events_dir,
@@ -493,8 +457,6 @@ def _run_outer_join_replay(
             how=how,
             max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(part_key, saved)
     return sink.read_committed(spark)
 
 
@@ -597,10 +559,7 @@ def q_stream_abandoned_clicks_replay(
         spark, sf_dir, tmp, ((-1, -1, "sentinel"),)
     )
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
+    with replay_width(spark):
         run_abandoned_clicks(
             spark,
             events_dir,
@@ -608,8 +567,6 @@ def q_stream_abandoned_clicks_replay(
             checkpoint_dir=os.path.join(tmp, "ckpt"),
             max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(part_key, saved)
     return sink.read_committed(spark)
 
 
@@ -663,10 +620,7 @@ def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tempfile.mkdtemp(prefix="stream_ssn_")  # outlives the returned plan
     events_dir = _sentinel_replay_dir(spark, sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
+    with replay_width(spark):
         run_session_windowed(
             spark,
             events_dir,
@@ -675,8 +629,6 @@ def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             gap=f"{_SSN_GAP_MIN} minutes",
             max_files_per_trigger=1,
         )
-    finally:
-        spark.conf.set(part_key, saved)
     return sink.read_committed(spark)
 
 
@@ -730,42 +682,21 @@ GROUP BY user_id
     tags=("streaming", "stateful", "exactly-once", "consistency"),
 )
 def q_stream_stateful_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..streaming.pipeline import read_events_stream
     from ..streaming.stateful import running_user_totals_cents
 
     tmp = tempfile.mkdtemp(prefix="stream_stateful_")
-    events_dir = os.path.join(tmp, "events")
-    os.makedirs(events_dir)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    os.symlink(src, os.path.join(events_dir, "a.parquet"))
-    os.symlink(src, os.path.join(events_dir, "b.parquet"))
+    events_dir = stage_replay_dir(sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
-        stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
-        totals = running_user_totals_cents(
-            stream.filter(F.col("user_id").isNotNull())
-        )
-        q = (
-            totals.writeStream.outputMode("update")
-            .foreachBatch(lambda df, bid: sink.write_batch(df, bid))
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(part_key, saved)
-    import glob
-
-    last = max(
-        int(os.path.basename(os.path.dirname(m)).split("=")[1])
-        for m in glob.glob(os.path.join(sink.out_dir, "*", "_COMMITTED"))
+    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
+    totals = running_user_totals_cents(
+        stream.filter(F.col("user_id").isNotNull())
     )
+    with replay_width(spark):
+        run_stream(
+            totals, sink.write_batch, os.path.join(tmp, "ckpt"), "update"
+        )
     final = spark.read.option("pathGlobFilter", "*.parquet").parquet(
-        os.path.join(sink.out_dir, f"batch_id={last}")
+        sink.committed_paths()[-1]
     )
     return final.select("user_id", "n_events", "total_cents")
 
@@ -794,29 +725,13 @@ def q_stream_stateful_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("streaming", "cdc", "retract", "exactly-once", "consistency"),
 )
 def q_stream_retract_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
     from ..sources import cdc
-    from ..streaming.pipeline import read_events_stream
     from .queries_ext4 import RETRACT_ROW_SCHEMA, synth_changelog_wire
 
     tmp = tempfile.mkdtemp(prefix="stream_retract_")
-    events_dir = os.path.join(tmp, "events")
-    os.makedirs(events_dir)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     # same fixture file twice + maxFilesPerTrigger=1 -> two micro-batches
-    os.symlink(src, os.path.join(events_dir, "a.parquet"))
-    os.symlink(src, os.path.join(events_dir, "b.parquet"))
+    events_dir = stage_replay_dir(sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
-
-    def _committed(below: int | None = None) -> list[tuple[int, str]]:
-        out = []
-        for m in glob.glob(os.path.join(sink.out_dir, "*", "_COMMITTED")):
-            d = os.path.dirname(m)
-            bid = int(os.path.basename(d).split("=")[1])
-            if below is None or bid < below:
-                out.append((bid, d))
-        return sorted(out)
 
     def apply(df, bid):
         ops = "c" if bid == 0 else "ud"
@@ -825,11 +740,11 @@ def q_stream_retract_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         partial = cdc.retract_aggregate(
             changes, "event_type", "cents", keep_retired=True
         )
-        prev_dirs = _committed(below=bid)
+        prev_dirs = sink.committed_paths(below=bid)
         if prev_dirs:
             prev = (
                 spark.read.option("pathGlobFilter", "*.parquet")
-                .parquet(prev_dirs[-1][1])
+                .parquet(prev_dirs[-1])
                 .select("event_type", "n_live", "total")
             )
             merged = (
@@ -844,21 +759,10 @@ def q_stream_retract_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = partial
         sink.write_batch(merged, bid)
 
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
-        stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(part_key, saved)
-    last_dir = _committed()[-1][1]
+    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
+    with replay_width(spark):
+        run_stream(stream, apply, os.path.join(tmp, "ckpt"))
+    last_dir = sink.committed_paths()[-1]
     final = spark.read.option("pathGlobFilter", "*.parquet").parquet(last_dir)
     return final.filter(F.col("n_live") > 0).select(
         "event_type", "n_live", F.col("total").alias("total_cents")
@@ -925,27 +829,10 @@ FROM sketch
     tags=("streaming", "sketch", "hll", "exactly-once", "consistency"),
 )
 def q_stream_sketch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob
-
-    from ..streaming.pipeline import read_events_stream
-
     tmp = tempfile.mkdtemp(prefix="stream_sketch_")
-    events_dir = os.path.join(tmp, "events")
-    os.makedirs(events_dir)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     # same fixture file twice + maxFilesPerTrigger=1 -> two micro-batches
-    os.symlink(src, os.path.join(events_dir, "a.parquet"))
-    os.symlink(src, os.path.join(events_dir, "b.parquet"))
+    events_dir = stage_replay_dir(sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
-
-    def _committed(below: int | None = None) -> list[tuple[int, str]]:
-        out = []
-        for m in glob.glob(os.path.join(sink.out_dir, "*", "_COMMITTED")):
-            d = os.path.dirname(m)
-            bid = int(os.path.basename(d).split("=")[1])
-            if below is None or bid < below:
-                out.append((bid, d))
-        return sorted(out)
 
     def apply(df, bid):
         # batch i keeps event_id % 2 == i: the replayed copies carve
@@ -953,11 +840,11 @@ def q_stream_sketch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         # reconstruct the whole-corpus sketch
         half = df.filter((F.col("event_id") % 2) == F.lit(bid % 2))
         partial = hll_registers(half)
-        prev_dirs = _committed(below=bid)
+        prev_dirs = sink.committed_paths(below=bid)
         if prev_dirs:
             prev = (
                 spark.read.option("pathGlobFilter", "*.parquet")
-                .parquet(prev_dirs[-1][1])
+                .parquet(prev_dirs[-1])
                 .select("event_type", "reg", "m_rho")
             )
             merged = (
@@ -969,20 +856,9 @@ def q_stream_sketch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             merged = partial
         sink.write_batch(merged, bid)
 
-    part_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(part_key)
-    spark.conf.set(part_key, "8")
-    try:
-        stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
-        q = (
-            stream.writeStream.foreachBatch(apply)
-            .option("checkpointLocation", os.path.join(tmp, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        spark.conf.set(part_key, saved)
-    last_dir = _committed()[-1][1]
+    stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
+    with replay_width(spark):
+        run_stream(stream, apply, os.path.join(tmp, "ckpt"))
+    last_dir = sink.committed_paths()[-1]
     regs = spark.read.option("pathGlobFilter", "*.parquet").parquet(last_dir)
     return hll_estimate(regs.select("event_type", "reg", "m_rho"))

@@ -14,12 +14,25 @@ the design that survives a 1000-executor scale-up.
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
 
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
+
+
+@contextmanager
+def pinned_conf(spark: SparkSession, key: str, value: str):
+    """Set one session conf for the ``with`` body and restore the
+    caller's value after, also when the body raises."""
+    saved = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
 
 
 def get_spark(

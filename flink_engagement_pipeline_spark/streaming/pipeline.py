@@ -30,12 +30,15 @@ fan-out + windowed aggregation — as one micro-batch pipeline:
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import latest_per_key
 from ..operators.enrich import enrich_events
 from ..schemas import EVENTS, EVENTS_RAW
+from ..session import pinned_conf
 from ..sources.tables import (
     _ensure_nanos_conf,
     events_ts_is_nanos,
@@ -45,6 +48,54 @@ from ..sources.tables import (
 from .sinks import Sink
 
 DEFAULT_WATERMARK = "1 minute"
+
+# Shuffle width of the fixture replays. A stateful operator allocates
+# one state store per shuffle partition per micro-batch: a vanilla
+# driver session's 200 partitions cost ~15 s of store setup for a
+# fixture-sized batch. Replays pin this width for the streaming run
+# only and restore the caller's conf after (each replay's checkpoint
+# is fresh, so the locked-in state width never conflicts).
+REPLAY_SHUFFLE_PARTITIONS = 8
+
+
+def replay_width(spark: SparkSession):
+    """Context manager: run a fixture replay at
+    ``REPLAY_SHUFFLE_PARTITIONS``."""
+    return pinned_conf(
+        spark, "spark.sql.shuffle.partitions", str(REPLAY_SHUFFLE_PARTITIONS)
+    )
+
+
+def stage_replay_dir(
+    sf_dir: str, tmp: str, table: str = "events", copies: int = 2
+) -> str:
+    """Stage ``tmp/<table>`` as a file-stream source holding the
+    fixture ``<table>.parquet`` symlinked once (a.parquet) or twice
+    (plus b.parquet). Under maxFilesPerTrigger=1 each copy is one
+    micro-batch, so a second copy replays every key of the first.
+    Returns the directory."""
+    data_dir = os.path.join(tmp, table)
+    os.makedirs(data_dir)
+    src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
+    for name in ("a", "b")[:copies]:
+        os.symlink(src, os.path.join(data_dir, f"{name}.parquet"))
+    return data_dir
+
+
+def run_stream(
+    out: DataFrame, write, checkpoint_dir: str, output_mode: str = "append"
+) -> None:
+    """Drain the streaming frame ``out`` to completion (availableNow)
+    through ``write(batch_df, batch_id)``: the one place a stream
+    starts."""
+    (
+        out.writeStream.foreachBatch(write)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def with_proc_time(df: DataFrame) -> DataFrame:
@@ -119,13 +170,7 @@ def run_enriched_fanout(
         finally:
             enriched.unpersist()
 
-    (
-        stream.writeStream.foreachBatch(_process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_stream(stream, _process, checkpoint_dir)
     for sink in sinks.values():
         sink.close()
 
@@ -200,18 +245,7 @@ def run_windowed(
         size=size,
         slide=slide,
     )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        sink.write_batch(batch_df, batch_id)
-
-    (
-        agg.writeStream.foreachBatch(_process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_stream(agg, sink.write_batch, checkpoint_dir)
     sink.close()
 
 
@@ -277,18 +311,7 @@ def run_session_windowed(
         watermark,
         gap=gap,
     )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        sink.write_batch(batch_df, batch_id)
-
-    (
-        agg.writeStream.foreachBatch(_process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_stream(agg, sink.write_batch, checkpoint_dir)
     sink.close()
 
 
@@ -370,18 +393,7 @@ def run_stream_stream_join(
             purchases,
             how="fullOuter" if how == "full_outer" else "leftOuter",
         )
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        sink.write_batch(batch_df, batch_id)
-
-    (
-        out.writeStream.foreachBatch(_process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_stream(out, sink.write_batch, checkpoint_dir)
     sink.close()
 
 
@@ -402,18 +414,7 @@ def run_abandoned_clicks(
 
     ev = read_events_stream(spark, events_dir, max_files_per_trigger)
     out = abandoned_clicks(ev)
-
-    def _process(batch_df: DataFrame, batch_id: int) -> None:
-        sink.write_batch(batch_df, batch_id)
-
-    (
-        out.writeStream.foreachBatch(_process)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    run_stream(out, sink.write_batch, checkpoint_dir)
     sink.close()
 
 

@@ -58,6 +58,15 @@ def live_op_rows(rows: DataFrame) -> DataFrame:
     return fold_op_rows(rows).filter(F.col("op") > 0).select(*cols)
 
 
+def _execute(df: DataFrame) -> None:
+    """Run a micro-batch to completion and discard its rows. A sink
+    that skips a redelivered batch must still execute it: stateful
+    operators upstream commit their state only when the batch runs,
+    and a restart whose batch never ran fails Spark's state-store
+    commit validation."""
+    df.write.format("noop").mode("overwrite").save()
+
+
 class Sink(Protocol):
     """foreachBatch-compatible sink: one call per micro-batch.
 
@@ -134,7 +143,10 @@ class IdempotentParquetSink:
     def write_batch(self, df: DataFrame, batch_id: int) -> None:
         part, marker = self._paths(batch_id)
         if os.path.exists(marker):
-            return  # redelivered batch: already committed, skip
+            # redelivered batch: already committed, so write nothing,
+            # but still execute it so its upstream state stores commit
+            _execute(df)
+            return
         df.write.mode("overwrite").parquet(part)
         with open(marker, "w"):
             pass
@@ -594,7 +606,8 @@ class RedisLeaderboardSink:
             deltas.foreachPartition(_apply)
             return
         if batch_id in self._applied_batches:
-            return  # redelivered batch: already accumulated, skip
+            _execute(df)  # redelivered batch: already accumulated
+            return
         for row in deltas.collect():
             member = row[self.key]
             self.scores[member] = self.scores.get(member, 0.0) + row["delta"]

@@ -159,6 +159,27 @@ def test_hex_prefix_pid_numbering_identical(spark):
         assert fast == ref, n_parts
 
 
+def test_hex_prefix_pid_rejects_non_hex_keys(spark):
+    """A non-NULL key whose first 4 chars are not lowercase hex digits
+    must fail the query instead of landing silently in a wrong range
+    (conv reads 'ZZZZ' as 0 and '12zz' as 0x12); NULL keys stay in
+    range 0."""
+    import pytest
+
+    from flink_engagement_pipeline_spark.operators.rank import hex_prefix_pid
+
+    ok = spark.createDataFrame([("ffff0",), (None,), ("0000",)], "k string")
+    assert [r[0] for r in ok.select(hex_prefix_pid("k", 4)).collect()] == [
+        3,
+        0,
+        0,
+    ]
+    for bad in ("ZZZZ", "12zz", "ABCD", "ab", ""):
+        df = spark.createDataFrame([(bad,)], "k string")
+        with pytest.raises(Exception, match="hex_prefix_pid: key"):
+            df.select(hex_prefix_pid("k", 4)).collect()
+
+
 def test_ivf_batch_probe_selection_gate_identical(spark, sf_dir):
     """r13 advisory #2 / r14 verdict #3: Spark-side probe selection
     above the batch-size gate must be identical to the driver loop —

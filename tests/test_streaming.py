@@ -570,6 +570,75 @@ def test_checkpoint_recovery_no_reprocessing(spark, events_dir, tmp_path):
     assert len(third.rows) == n_first  # same file content, processed once
 
 
+class _CrashOnceAfterCommit:
+    """Delegating sink whose first delivery of ``crash_bid`` raises
+    AFTER the wrapped sink has committed it: the crash window between
+    a sink's own commit and the checkpoint's commit log, which makes
+    the restarted query redeliver the batch."""
+
+    def __init__(self, inner, crash_bid: int = 1):
+        self.inner = inner
+        self.crash_bid = crash_bid
+        self.delivered: list[int] = []
+
+    def write_batch(self, df, batch_id):
+        self.delivered.append(batch_id)
+        self.inner.write_batch(df, batch_id)
+        if batch_id == self.crash_bid and self.delivered.count(batch_id) == 1:
+            raise RuntimeError("injected crash after sink commit")
+
+    def close(self):
+        self.inner.close()
+
+
+@pytest.mark.parametrize("kind", ["parquet", "leaderboard"])
+def test_restart_after_crash_past_sink_commit(
+    spark, doubled_events_dir, tmp_path, kind
+):
+    """A real crash and restart: batch 1 of a cross-batch-dedup fan-out
+    raises after its sink committed it, and the query restarts from
+    the same checkpoint. The redelivered batch hits the sink's skip
+    path, which must still execute the batch so its dedup state
+    commits; otherwise the restart fails state-store commit
+    validation. The sink then holds exactly an uninterrupted run's
+    state."""
+
+    def make(name):
+        if kind == "parquet":
+            return sk.IdempotentParquetSink(str(tmp_path / name))
+        return sk.RedisLeaderboardSink()
+
+    def state(sink):
+        if kind == "parquet":
+            return sorted(map(tuple, sink.read_committed(spark).collect()))
+        return sink.scores
+
+    def run(sink, ckpt):
+        sp.run_enriched_fanout(
+            spark,
+            doubled_events_dir,
+            SF,
+            {kind: sink},
+            str(tmp_path / ckpt),
+            cross_batch_dedup=True,
+            max_files_per_trigger=1,
+        )
+
+    ref = make("ref-out")
+    run(ref, "ckpt-ref")
+
+    crashing = _CrashOnceAfterCommit(make("out"))
+    with pytest.raises(Exception, match="injected crash after sink commit"):
+        run(crashing, "ckpt")
+    assert crashing.delivered == [0, 1]
+    run(crashing, "ckpt")  # restart from the same checkpoint
+    assert crashing.delivered == [0, 1, 1]
+    expect = state(ref)
+    if kind == "leaderboard":  # float sums in shuffle-arrival order
+        expect = pytest.approx(expect)
+    assert state(crashing.inner) == expect
+
+
 def test_stream_stream_join_matches_batch(spark, events_dir, tmp_path):
     """Stream-stream event-time join (clicks -> purchases within 1h,
     same user) must produce exactly the batch join's rows when the
