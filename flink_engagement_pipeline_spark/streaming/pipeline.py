@@ -73,12 +73,15 @@ def stage_replay_dir(
     fixture ``<table>.parquet`` symlinked once (a.parquet) or twice
     (plus b.parquet). Under maxFilesPerTrigger=1 each copy is one
     micro-batch, so a second copy replays every key of the first.
-    Returns the directory."""
+    Idempotent, so a replay restarting from its checkpoint in the same
+    ``tmp`` re-stages over its own directory. Returns the directory."""
     data_dir = os.path.join(tmp, table)
-    os.makedirs(data_dir)
+    os.makedirs(data_dir, exist_ok=True)
     src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
     for name in ("a", "b")[:copies]:
-        os.symlink(src, os.path.join(data_dir, f"{name}.parquet"))
+        link = os.path.join(data_dir, f"{name}.parquet")
+        if not os.path.lexists(link):
+            os.symlink(src, link)
     return data_dir
 
 

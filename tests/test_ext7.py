@@ -226,6 +226,68 @@ def test_stream_neardup_replay_matches_batch_rebuild(spark, sf_dir):
     assert s0 | s1 == {(a, b) for a, b, _ in want}
 
 
+def test_neardup_index_replay_restarts_after_crash(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A real crash and restart of an index-maintenance replay: batch 1
+    raises after the index sink committed it (and after the policy
+    compaction folded batch 0 into compact=0), before the pairs sink
+    writes it. Restarting from the same directory re-stages the source,
+    redelivers batch 1 from the checkpoint, and leaves the committed
+    index and pairs equal to an uninterrupted run's."""
+    from flink_engagement_pipeline_spark.plans.queries_ext7 import (
+        run_neardup_index_replay,
+    )
+
+    write_batch = IdempotentParquetSink.write_batch
+    delivered = []
+
+    def crash_once(self, df, batch_id):
+        sink = os.path.basename(self.out_dir)
+        delivered.append((sink, batch_id))
+        if (sink, batch_id) == ("pairs", 1) and delivered.count(
+            ("pairs", 1)
+        ) == 1:
+            raise RuntimeError("injected crash before pairs commit")
+        write_batch(self, df, batch_id)
+
+    def committed(tmp):
+        return [
+            sorted(
+                map(
+                    tuple,
+                    IdempotentParquetSink(os.path.join(tmp, name))
+                    .read_committed(spark)
+                    .collect(),
+                )
+            )
+            for name in ("index", "pairs")
+        ]
+
+    ref, tmp = str(tmp_path / "ref"), str(tmp_path / "crash")
+    run_neardup_index_replay(spark, sf_dir, ref)
+
+    monkeypatch.setattr(IdempotentParquetSink, "write_batch", crash_once)
+    with pytest.raises(Exception, match="injected crash before pairs commit"):
+        run_neardup_index_replay(spark, sf_dir, tmp)
+    assert os.path.exists(
+        os.path.join(tmp, "index", "compact=0", "_COMMITTED")
+    )
+    assert os.path.exists(
+        os.path.join(tmp, "index", "batch_id=1", "_COMMITTED")
+    )
+    assert not os.path.exists(os.path.join(tmp, "pairs", "batch_id=1"))
+
+    run_neardup_index_replay(spark, sf_dir, tmp)  # restart, same tmp
+    assert delivered == [
+        ("index", 0), ("pairs", 0),
+        ("index", 1), ("pairs", 1),
+        ("index", 1), ("pairs", 1),
+    ]
+    got, want = committed(tmp), committed(ref)
+    assert got == want and all(want)
+
+
 def test_stream_ivf_replay_matches_pinned_rebuild(spark, sf_dir):
     """IVF codes maintenance under the pinned quantizer: the union of
     per-batch (vec_id, cluster) deltas equals assigning the WHOLE

@@ -1496,19 +1496,14 @@ def test_cumulate_single_exchange(spark, sf_dir):
 
 
 def test_plan_snapshots_no_drift(spark):
-    """Round-7 ask #7: the mechanical claim-vs-plan divergence check
-    (tools/gen_plans.py --diff) runs IN the suite over the full
-    expanded snapshot set — every bench=True headline query plus the
-    flagship operator list. A skeleton change (operator added,
-    removed, or moved; expression-id/path/statistic churn is
-    normalized away) fails here until PLANS.md is regenerated with an
-    intended-change rationale in the commit. This is the guard that
-    would have caught the round-5 bucketed-join divergence
-    everywhere it matters, not just where a hand-written audit
-    existed. Heaviest test in the suite after the oracle sweep: it
-    builds every snapshotted plan at sf0.01 (iterative trainers pay
-    their metadata-sized driver jobs once; the trainer memos make
-    repeats cheap)."""
+    """PLANS.md pins the operator skeleton of every snapshotted plan
+    (its own sections plus every bench=True query): the current plan's
+    skeleton must equal the committed lines, so an operator added,
+    removed or moved fails here until PLANS.md is regenerated with the
+    reason in the commit. Every committed section must be a fixed point
+    of skeleton(), so a full plan, an expression id or a temp path
+    cannot be committed in its place. Builds every snapshotted plan at
+    sf0.01."""
     import importlib.util
     import os
 
@@ -1519,15 +1514,16 @@ def test_plan_snapshots_no_drift(spark):
     gp = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(gp)
 
-    generated = gp.generate_plans(spark)
-    committed = gp.parse_plans_md(os.path.join(root, "PLANS.md"))
-    missing = [n for n in generated if n not in committed]
-    assert missing == [], f"no committed snapshot for {missing}"
-    drifted = [
-        n
-        for n, plan in generated.items()
-        if gp.skeleton(committed[n]) != gp.skeleton(plan)
+    committed = gp.parse_plans_md(gp.PLANS_MD)
+    not_skeletons = [
+        n for n, lines in committed.items()
+        if gp.skeleton("\n".join(lines)) != lines
     ]
+    assert not_skeletons == [], f"not a plan skeleton: {not_skeletons}"
+    missing = [n for n in gp.snapshot_names(committed) if n not in committed]
+    assert missing == [], f"no committed snapshot for {missing}"
+    generated = gp.generate_skeletons(spark, committed)
+    drifted = [n for n in committed if generated.get(n) != committed[n]]
     assert drifted == [], (
         f"plan skeleton drift in {drifted} — run tools/gen_plans.py "
         "--diff, decide intended-vs-regression, regenerate if intended"

@@ -1,24 +1,22 @@
 #!/usr/bin/env python
-"""Regenerate PLANS.md: formatted physical plans of every bench=True
-registry query at sf0.01. Read the header of PLANS.md for what the
-plans are expected to show.
+"""Regenerate PLANS.md: the operator skeleton of each snapshotted
+query's physical plan at sf0.01. The snapshot set is PLANS.md's own
+sections plus every bench=True registry query.
 
 Usage:
-    python tools/gen_plans.py           # regenerate PLANS.md
-    python tools/gen_plans.py --diff    # compare current plans against
-                                        # the committed PLANS.md and
-                                        # report queries whose OPERATOR
-                                        # SKELETON changed (node ids,
-                                        # paths and stats are
-                                        # normalized away), then exit
-                                        # 1 if anything drifted.
+    python tools/gen_plans.py                    # regenerate PLANS.md
+    python tools/gen_plans.py <name> ...         # regenerate, adding
+                                                 # these queries
+    python tools/gen_plans.py --diff             # report queries whose
+                                                 # skeleton differs from
+                                                 # PLANS.md; exit 1 if any
+    python tools/gen_plans.py --show <name> ...  # print full formatted
+                                                 # plans to stdout
 
-The --diff mode exists because of the round-5 verdict: a query's
-docstring claimed an exchange-free plan while the committed snapshot
-showed a BroadcastExchange, and nothing surfaced the divergence
-mechanically. Run --diff before regenerating; a skeleton change must
-be either intended (then regenerate and say why in the commit) or a
-regression (then fix the plan).
+--show reads ``$SPARK_GRAFT_SF_DIR`` (default sf0.01). Run --diff
+before regenerating: a skeleton change is either intended (regenerate
+and say why in the commit) or a regression (fix the plan).
+tests/test_plans.py::test_plan_snapshots_no_drift runs the same check.
 """
 
 from __future__ import annotations
@@ -29,309 +27,109 @@ import sys
 
 # `python tools/gen_plans.py` puts tools/ (not the repo root) on
 # sys.path; add the parent so the package resolves without PYTHONPATH.
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from flink_engagement_pipeline_spark import plans  # noqa: E402
 from flink_engagement_pipeline_spark.session import get_spark  # noqa: E402
 
-HEADER = """# PLANS — physical plans of the benchmark headline queries
+PLANS_MD = os.path.join(ROOT, "PLANS.md")
+SF_DIR = "/root/testdata/sf0.01"
+
+HEADER = """# PLANS — plan skeletons of the snapshotted queries
 
 Generated by `python tools/gen_plans.py` (sf0.01, `local[8]`, shuffle
-partitions 8 — partition counts scale with the session; operator
-structure does not). What to look for, per the 100 TB design rules:
-`PushedFilters`/`ReadSchema` pruning at every scan, `BroadcastHashJoin`
-on dimension joins (never a fact-side shuffle), single `Exchange` for
-the HOP window, `TakeOrderedAndProject` for top-k, and no
-`CartesianProduct` anywhere.
+partitions 8). Each section is one query's physical-plan operator tree
+with node, codegen and plan ids stripped: it changes only when an
+operator appears, disappears or moves, and
+`tests/test_plans.py::test_plan_snapshots_no_drift` fails until it is
+regenerated. The set is every section below plus every `bench=True`
+query; `python tools/gen_plans.py <name> ...` adds one. What to look
+for, per the 100 TB design rules: `BroadcastHashJoin` on dimension
+joins, one `Exchange` for the HOP window, `TakeOrderedAndProject` for
+top-k, no `CartesianProduct`. Iterative trainers show only their final
+lazy plan; `stream_*` replays are not snapshotted, as their returned
+frame only reads the committed sink. Scan-level detail
+(`PushedFilters`, `ReadSchema`) and expressions are printed by
+`python tools/gen_plans.py --show <name>`.
 """
 
-FLAGSHIP_HEADER = (
-    "# Flagship operator plans (non-bench)\n\n"
-    "Iterative trainers (k-means, PQ, IVF) show only their FINAL\n"
-    "lazy plan here — the training aggregations run eagerly as\n"
-    "metadata-sized driver jobs before it. What to look for:\n"
-    "assignments/ADC are scan+project with literal centroids (no\n"
-    "Exchange), the salted join is a ShuffledHashJoin keyed by\n"
-    "(key, __salt), epoch ordering has no SinglePartition\n"
-    "exchange, and the portable-MinHash pipeline is the\n"
-    "explode -> signature-groupBy -> band equi-join -> verify\n"
-    "shape with no cartesian anywhere.\n"
-)
 
-FLAGSHIP = (
-    "embedding_kmeans",
-    "embedding_pq_adc",
-    "embedding_ann_ivf",
-    "docs_minhash_portable",
-    "docs_dedup_e2e_portable",
-    "events_salted_join",
-    "docs_epoch_order",
-    "docs_unigram_logprob",
-    "embedding_ivf_pq",
-    "docs_minhash_ingest",
-    "docs_pmi_bigrams",
-    "docs_quality_deciles",
-    "events_zorder",
-    "docs_head_editdist",
-    "parts_pagerank",
-    "embedding_ann_recall",
-    "docs_dedup_survivors_quality",
-    "embedding_power_iteration",
-    "docs_bigram_logprob",
-    "docs_weighted_sample",
-    "docs_snapshot_diff",
-    # round-5 additions
-    "events_partitioned_prune",
-    "hll_portable_reach",
-    "orders_scd2_history",
-    "lineitem_bucketed_join",
-    "events_bloom_prune",
-    "user_active_coverage",
-    "embedding_matryoshka_rerank",
-    "events_value_trend_ols",
-    "cms_user_frequency",
-    "events_hdr_quantiles",
-    "cdc_retract_agg",
-    "cep_conversion_within",
-    # round-6 additions
-    "cep_direct_purchase",
-    "docs_simhash_ingest",
-    "embedding_neardup_ingest",
-    "cep_session_conversion",
-    "cep_engaged_conversion",
-    "embedding_mmr_rerank",
-    "embedding_mmr_batch",
-    "cumulate_engagement",
-    "docs_bpe_merges",
-    # round-7 additions (the batch surface; the stream_* replays are
-    # not snapshot-able — their returned frame is just the committed
-    # sink read, the interesting plan lives inside the streaming job)
-    # + the round-6 window pattern family the round-7 verdict asked
-    # to bring under the mechanical drift check
-    "window_topn",
-    "window_dedup",
-    "window_join",
-    "docs_bpe_encode",
-    "embedding_ivf_ingest",
-    "docs_substring_dedup",
-    "docs_substring_scrub",
-    "docs_repeated_spans",
-    "events_latency_quantiles",
-    "embedding_knn_graph",
-    "parts_triangles",
-    "docs_bpe_perplexity",
-    "session_windows_dynamic",
-    # round-8 batch additions (r8 verdict ask #8: the index-deletion
-    # plans carry plan-shape claims — broadcast anti/left joins over
-    # narrow index tables — so they join the drift check)
-    "docs_minhash_index_delete",
-    "embedding_ivf_delete",
-    # round-9 additions (same rule: every new batch query whose
-    # docstring makes a plan-shape claim is snapshot-guarded)
-    "docs_simhash_index_delete",
-    "embedding_neardup_index_delete",
-    "media_phash_neardup",
-    "media_phash_ingest",
-    "media_phash_index_delete",
-    # round-10 batch additions (the two stream_* replays stay out per
-    # the standing rule — their returned frame is the committed-sink
-    # read; the frame/bucket/join shapes they claim are the same
-    # snapshot-guarded plans the batch twins below carry)
-    "media_video_neardup",
-    "media_video_ingest",
-    "media_video_index_delete",
-    "embedding_semdedup",
-    "media_dedup_survivors",
-    # round-11 additions (same rule: each docstring claims a plan
-    # shape — touched-cluster In-pushdown on the ingest, two
-    # TakeOrderedAndProject stages + metadata fusion on the hybrid,
-    # leftsemi/left-anti gates on the manifest)
-    "embedding_semdedup_ingest",
-    "embedding_semdedup_delete",
-    "docs_hybrid_retrieval",
-    "docs_hybrid_retrieval_batch",
-    "corpus_manifest_multimodal",
-    "docs_manifest_ingest",
-    # round-12 additions (same rule — the stream_* replays stay out):
-    # the manifest takedown (touched-fp leftsemi re-screen, batch
-    # window exemption), the persisted-state composition (state-scan
-    # gates, no video machinery at serve), and the BM25 index cells
-    # (term-isin pushdown into the postings scan, tombstone fold on
-    # the pruned slice, broadcast stats, TakeOrdered top-k)
-    "docs_manifest_delete",
-    "corpus_manifest_from_state",
-    "docs_bm25_from_index",
-    "docs_bm25_ingest",
-    "docs_bm25_delete",
-    "docs_hybrid_retrieval_ivf",
-    # round-13 additions (same rule — stream_pq_index_replay stays
-    # out): the index-served batched hybrid (per-qid cluster-isin
-    # pushdown into the codes scan, candidate equi-joins, no
-    # corpus-streaming BNLJ on the dense side), the PQ lifecycle
-    # cells (pinned-quantizer encode projections, op-fold, probed
-    # ADC), BM25 physical compaction (serve from the compact=
-    # snapshot), and the served-ANN recall evals
-    "docs_hybrid_retrieval_batch_ivf",
-    "embedding_pq_ingest",
-    "embedding_pq_delete",
-    "docs_bm25_compact",
-    "embedding_ivf_recall",
-    "embedding_ivf_pq_recall",
-    "docs_quality_calibration",
-    # round-9 expansion (r8 verdict ask #8, closed): EVERY remaining
-    # batch query whose docstring makes a plan-shape claim (broadcast,
-    # exchange count, pushdown, TakeOrdered, zero-shuffle, ...) joins
-    # the mechanical drift check — the stream_* replays stay out (their
-    # returned frame is the committed-sink read; the interesting plan
-    # lives inside the streaming job)
-    "docs_tokenize_ids",
-    "embedding_range_search",
-    "nation_market_share",
-    "embedding_quantize",
-    "docs_bm25",
-    "events_ewma",
-    "sink_projection",
-    "promo_revenue",
-    "events_dim_asof",
-    "events_from_buyers",
-    "docs_tfidf",
-    "orders_events_interval_join",
-    "conversion_funnel",
-    "events_profile",
-    "part_string_functions",
-    "user_running_totals",
-    "activity_union_all",
-    "grouping_sets_engagement",
-    "hll_user_reach",
-    "minute_rollup_gapfill",
-    "event_stats_unpivot",
-    "user_first_last_event",
-    "value_histogram",
-    "user_trailing_7d_value",
-    "user_event_type_sets",
-    "user_retention_cohort",
-    "events_global_seq",
-    "click_to_purchase_latency",
-    "events_anomaly_zscore",
-    "user_activity_reconciliation",
-    "user_rfm_scores",
-    "parts_bought_together",
-    "user_markov_transitions",
-    "docs_repetition",
-    "docs_simhash",
-    "embedding_knn_join",
-    "docs_clean",
-    "docs_dedup_clusters",
-    "docs_dedup_e2e",
-    "docs_word_positions",
-    "docs_simhash_pairs",
-    "docs_training_manifest",
-    "docs_bigram_freq",
-    "docs_train_split",
-    "docs_chunks",
-    "docs_lang_downsample",
-    "docs_contamination",
-    "docs_pack_sequences",
-    "docs_mixture_sample",
-    "docs_pii_redact",
-    "docs_span_dedup",
-    "shipmode_priority_counts",
-    "late_ship_priority_counts",
-    "large_volume_customers",
-    "returned_item_customers",
-    "brand_bracket_revenue",
-    "brand_supplier_counts",
-    "dominant_event_types",
-    "nation_pair_trade",
-    "customer_order_distribution",
-    "top_revenue_supplier",
-    "lone_late_suppliers",
-    "idle_rich_customers",
-    "cheapest_supplier_per_part",
-    "audience_overlap",
-    "events_ntile_quartiles",
-    "docs_token_entropy",
-    "docs_quality_gate",
-    "events_anomaly_mad",
-    "value_rank_distribution",
-    "weekly_gmv_growth",
-    "docs_cc_star",
-)
+def snapshot_names(committed, extra=()) -> list[str]:
+    """The snapshot set in PLANS.md order: the committed sections, then
+    bench=True queries and ``extra`` names not yet committed."""
+    names = list(committed)
+    bench = [n for n, spec in plans.REGISTRY.items() if spec.bench]
+    for name in bench + list(extra):
+        if name not in names:
+            names.append(name)
+    return names
 
 
-def generate_plans(spark) -> dict[str, str]:
-    """name -> formatted physical plan, for every bench query plus the
-    flagship non-bench operators, in PLANS.md section order."""
-    sf = "/root/testdata/sf0.01"
+def explain(spark, name: str, sf_dir: str = SF_DIR) -> str:
+    """The formatted physical plan of a registered query."""
     mode = spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
         "formatted"
     )
-    out: dict[str, str] = {}
-    for name, spec in plans.REGISTRY.items():
-        if spec.bench:
-            out[name] = (
-                spec.spark(spark, sf)._jdf.queryExecution().explainString(mode)
-            ).strip()
-    for name in FLAGSHIP:
-        spec = plans.REGISTRY[name]
-        out[name] = (
-            spec.spark(spark, sf)._jdf.queryExecution().explainString(mode)
-        ).strip()
-    return out
+    df = plans.REGISTRY[name].spark(spark, sf_dir)
+    return df._jdf.queryExecution().explainString(mode).strip()
+
+
+def generate_skeletons(spark, names) -> dict[str, list[str]]:
+    """name -> skeleton of its current plan, for every registered name
+    (a committed section whose query is gone is left out)."""
+    return {
+        n: skeleton(explain(spark, n)) for n in names if n in plans.REGISTRY
+    }
 
 
 def skeleton(plan: str) -> list[str]:
     """The operator SKELETON of a formatted plan: the physical-plan
     tree lines with node ids stripped — stable across expression-id
     churn, temp paths, statistics, and partition-count changes, but
-    different whenever an operator appears/disappears/moves (the class
-    of drift a docstring claim can silently diverge from)."""
-    lines = []
-    in_tree = False
-    for line in plan.splitlines():
-        if line.startswith("== Physical Plan =="):
-            in_tree = True
-            continue
-        if in_tree:
-            if not line.strip():
-                break
-            # "(4) Exchange" -> "Exchange"; also normalize AQE result
-            # markers and codegen stage ids
-            norm = re.sub(r"\(\d+\)", "", line)
-            norm = re.sub(r"\[codegen id : \d+\]", "", norm)
-            norm = re.sub(r"plan_id=\d+", "plan_id=_", norm)
-            lines.append(norm.rstrip())
-    return lines
-
-
-def parse_plans_md(path: str) -> dict[str, str]:
-    """name -> plan text from an existing PLANS.md."""
-    if not os.path.exists(path):
-        return {}
-    text = open(path).read()
-    out: dict[str, str] = {}
-    for m in re.finditer(r"^## (\S+)\n\n```\n(.*?)\n```", text, re.S | re.M):
-        out[m.group(1)] = m.group(2).strip()
+    different whenever an operator appears/disappears/moves. A text
+    without a `== Physical Plan ==` line is read as a tree already,
+    so a skeleton is its own skeleton."""
+    lines = plan.splitlines()
+    if "== Physical Plan ==" in lines:
+        lines = lines[lines.index("== Physical Plan ==") + 1:]
+    out = []
+    for line in lines:
+        if not line.strip():
+            break
+        # "(4) Exchange" -> "Exchange"; also normalize codegen stage
+        # ids and plan ids
+        norm = re.sub(r"\(\d+\)", "", line)
+        norm = re.sub(r"\[codegen id : \d+\]", "", norm)
+        norm = re.sub(r"plan_id=\d+", "plan_id=_", norm)
+        out.append(norm.rstrip())
     return out
 
 
-def write_plans_md(generated: dict[str, str]) -> None:
-    sections = [HEADER]
-    flagship_set = set(FLAGSHIP)
-    for name, plan in generated.items():
-        if name in flagship_set:
-            continue
-        sections.append(f"## {name}\n\n```\n{plan}\n```\n")
-    sections.append(FLAGSHIP_HEADER)
-    for name in FLAGSHIP:
-        sections.append(f"## {name}\n\n```\n{generated[name]}\n```\n")
-    with open("PLANS.md", "w") as f:
+def parse_plans_md(path: str = PLANS_MD) -> dict[str, list[str]]:
+    """name -> committed skeleton lines, in file order."""
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        text = f.read()
+    return {
+        m.group(1): m.group(2).splitlines()
+        for m in re.finditer(r"^## (\S+)\n\n```\n(.*?)\n```", text, re.S | re.M)
+    }
+
+
+def write_plans_md(skeletons: dict[str, list[str]]) -> None:
+    sections = [HEADER] + [
+        f"## {name}\n\n```\n" + "\n".join(lines) + "\n```\n"
+        for name, lines in skeletons.items()
+    ]
+    with open(PLANS_MD, "w") as f:
         f.write("\n".join(sections))
-    print(f"wrote PLANS.md ({len(generated)} queries)")
+    print(f"wrote {PLANS_MD} ({len(skeletons)} queries)")
 
 
-def diff_report(old: dict[str, str], new: dict[str, str]) -> bool:
-    """Print skeleton drift between committed and current plans.
+def diff_report(old: dict[str, list[str]], new: dict[str, list[str]]) -> bool:
+    """Print skeleton drift between committed and current skeletons.
     Returns True if anything drifted."""
     import difflib
 
@@ -341,15 +139,16 @@ def diff_report(old: dict[str, str], new: dict[str, str]) -> bool:
             print(f"NEW     {name} (no committed snapshot)")
             drifted = True
             continue
-        a, b = skeleton(old[name]), skeleton(new[name])
-        if a != b:
+        if old[name] != new[name]:
             drifted = True
             print(f"CHANGED {name}:")
-            for d in difflib.unified_diff(a, b, "committed", "current", lineterm=""):
+            for d in difflib.unified_diff(
+                old[name], new[name], "committed", "current", lineterm=""
+            ):
                 print(f"  {d}")
     for name in old:
         if name not in new:
-            print(f"REMOVED {name} (snapshot exists, query gone from the set)")
+            print(f"REMOVED {name} (snapshot exists, query is not registered)")
             drifted = True
     if not drifted:
         print(f"no skeleton drift across {len(new)} plans")
@@ -357,12 +156,25 @@ def diff_report(old: dict[str, str], new: dict[str, str]) -> bool:
 
 
 def main() -> None:
+    args = sys.argv[1:]
+    flags = {a for a in args if a.startswith("--")}
+    names = [a for a in args if not a.startswith("--")]
+    bad = sorted(flags - {"--diff", "--show"}) + [
+        n for n in names if n not in plans.REGISTRY
+    ]
+    if bad:
+        sys.exit(f"not an option or a registered query: {' '.join(bad)}")
     spark = get_spark("gen-plans", cores=8, shuffle_partitions=8)
-    generated = generate_plans(spark)
-    if "--diff" in sys.argv:
-        old = parse_plans_md("PLANS.md")
-        sys.exit(1 if diff_report(old, generated) else 0)
-    write_plans_md(generated)
+    if "--show" in flags:
+        sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", SF_DIR)
+        for name in names:
+            print(f"## {name}\n\n{explain(spark, name, sf_dir)}\n")
+        return
+    committed = parse_plans_md()
+    current = generate_skeletons(spark, snapshot_names(committed, names))
+    if "--diff" in flags:
+        sys.exit(1 if diff_report(committed, current) else 0)
+    write_plans_md(current)
 
 
 if __name__ == "__main__":
