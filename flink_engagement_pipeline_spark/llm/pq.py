@@ -313,8 +313,8 @@ def encoded_table(
     temp directory keyed by the same deterministic memo as the
     codebooks, so a repeated call re-reads, never re-encodes."""
     import os
-    import tempfile
 
+    from .. import tmpdirs
     from .cluster import assign_clusters
 
     books = train_codebooks(emb)
@@ -345,7 +345,7 @@ def encoded_table(
             )
         else:
             enc = e.select("vec_id", *cols)
-        path = os.path.join(tempfile.mkdtemp(prefix="pq_index_"), "codes")
+        path = os.path.join(tmpdirs.mkdtemp(prefix="pq_index_"), "codes")
         # the one-time index build runs with whole-stage codegen OFF
         # (see wholestage_off): fusing the coarse assignment + 8 code
         # argmins into a single generated method makes Janino compile

@@ -36,11 +36,11 @@ oracle through one generator per family.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..llm import pq
 from ..llm import similarity as ls
 from ..llm.cluster import _dot_py, _km_dist, km_assign_cte, km_update_cte
@@ -418,7 +418,7 @@ def pq_state_dir(spark: SparkSession, sf_dir: str) -> str:
     key = (os.path.abspath(sf_dir), _memo_key(emb))
     if key not in _PQ_STATE_MEMO:
         _state_memo_evict(_PQ_STATE_MEMO, key[0])
-        tmp = tempfile.mkdtemp(prefix="pq_state_")
+        tmp = tmpdirs.mkdtemp(prefix="pq_state_")
         sink = IdempotentParquetSink(os.path.join(tmp, "codes"))
         books, coarse = _pq_quantizers(emb)
         _write_codes(spark, sink, pq.encode_codes(emb, books, coarse), 0)
@@ -513,7 +513,7 @@ def q_embedding_pq_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") < cut)
     batch = emb.filter(F.col("vec_id") >= cut)
     books, coarse = _pq_quantizers(corpus)  # corpus-trained, pinned
-    tmp = tempfile.mkdtemp(prefix="pq_ingest_")
+    tmp = tmpdirs.mkdtemp(prefix="pq_ingest_")
     sink = IdempotentParquetSink(os.path.join(tmp, "codes"))
     # r15 (guide §2.6 overlap independent jobs): the corpus and batch
     # encode+write actions are INDEPENDENT (disjoint batch-id dirs of
@@ -592,7 +592,7 @@ SELECT {_PQ_SEL} FROM enc WHERE vec_id % {_PQ_TAKEDOWN_MOD} <> 0
 def q_embedding_pq_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     books, coarse = _pq_quantizers(emb)
-    tmp = tempfile.mkdtemp(prefix="pq_delete_")
+    tmp = tmpdirs.mkdtemp(prefix="pq_delete_")
     sink = IdempotentParquetSink(os.path.join(tmp, "codes"))
     _write_codes(spark, sink, pq.encode_codes(emb, books, coarse), 0)
     committed = sink.read_committed(spark)
@@ -684,7 +684,7 @@ def _fold_op_codes(codes: DataFrame) -> DataFrame:
 def q_stream_pq_index_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_pq_idx_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_pq_idx_")
     return run_pq_index_replay(spark, sf_dir, tmp)
 
 
@@ -731,7 +731,7 @@ def q_docs_bm25_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     mod = _BM25_TAKEDOWN_MOD
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     deleted = docs.filter(F.col("doc_id") % mod == 0)
-    tmp = tempfile.mkdtemp(prefix="bm25_compact_")
+    tmp = tmpdirs.mkdtemp(prefix="bm25_compact_")
     post_sink = IdempotentParquetSink(os.path.join(tmp, "postings"))
     stats_sink = IdempotentParquetSink(os.path.join(tmp, "stats"))
     post_sink.write_batch(lx.postings_of(docs), 0)

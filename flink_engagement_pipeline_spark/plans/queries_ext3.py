@@ -11,11 +11,11 @@ derived from a single integer.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..sources.tables import load_table
 from .registry import register
 
@@ -70,7 +70,7 @@ GROUP BY user_id
 )
 def q_events_partitioned_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="events_part_")  # outlives the plan
+    tmp = tmpdirs.mkdtemp(prefix="events_part_")  # outlives the plan
     out = os.path.join(tmp, "events_by_type")
     # partitionBy moves event_type into directory keys; everything else
     # stays columnar inside each partition
@@ -364,7 +364,7 @@ def q_lineitem_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stale location makes the next session's CREATE fail with
     # LOCATION_ALREADY_EXISTS. The bucketed layout is derived state;
     # the fixture stays the source of truth.
-    tmp = tempfile.mkdtemp(prefix="bucketed_join_")
+    tmp = tmpdirs.mkdtemp(prefix="bucketed_join_")
     li.select("l_orderkey", "l_extendedprice").write.bucketBy(
         8, "l_orderkey"
     ).sortBy("l_orderkey").mode("overwrite").format("parquet").option(

@@ -894,8 +894,8 @@ GROUP BY user_id
 def q_stream_cep_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
-    import tempfile
 
+    from .. import tmpdirs
     from ..operators.cep import (
         expire_state,
         match_pattern_incremental,
@@ -904,7 +904,7 @@ def q_stream_cep_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.pipeline import replay_width, run_stream
     from ..streaming.sinks import IdempotentParquetSink
 
-    tmp = tempfile.mkdtemp(prefix="stream_cep_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_cep_")
     events_dir = os.path.join(tmp, "events")
     os.makedirs(events_dir)
     prep = _cep_events(spark, sf_dir)

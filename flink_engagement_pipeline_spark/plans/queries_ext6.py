@@ -17,11 +17,11 @@ float hazard kept integer until a single final division.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..llm import dedup as ld
 from ..llm import multimodal as lm
 from ..llm import similarity as ls
@@ -179,7 +179,7 @@ def run_minhash_index_replay(
 def q_stream_minhash_index_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_minhash_idx_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_minhash_idx_")
     return run_minhash_index_replay(spark, sf_dir, tmp)
 
 
@@ -249,7 +249,7 @@ def run_simhash_index_replay(
 def q_stream_simhash_index_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_simhash_idx_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_simhash_idx_")
     return run_simhash_index_replay(spark, sf_dir, tmp)
 
 
@@ -554,5 +554,5 @@ def run_media_phash_index_replay(
 def q_stream_media_phash_index_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_phash_idx_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_phash_idx_")
     return run_media_phash_index_replay(spark, sf_dir, tmp)

@@ -17,11 +17,11 @@ integer until a single final division.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..llm import cluster as lc
 from ..llm import dedup as ld
 from ..llm import multimodal as lm
@@ -133,7 +133,7 @@ def run_neardup_index_replay(
 def q_stream_neardup_index_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_neardup_idx_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_neardup_idx_")
     return run_neardup_index_replay(spark, sf_dir, tmp)
 
 
@@ -198,7 +198,7 @@ def run_ivf_index_replay(
 def q_stream_ivf_index_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_ivf_idx_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_ivf_idx_")
     return run_ivf_index_replay(spark, sf_dir, tmp)
 
 
@@ -350,7 +350,7 @@ def run_media_video_index_replay(
 def q_stream_media_video_index_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_video_idx_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_video_idx_")
     return run_media_video_index_replay(spark, sf_dir, tmp)
 
 

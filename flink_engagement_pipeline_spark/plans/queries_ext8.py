@@ -17,11 +17,11 @@ integer until a single final division.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..llm import cluster as lc
 from ..llm import multimodal as lm
 from ..llm import similarity as ls
@@ -247,7 +247,7 @@ def serve_semdedup_keepdrop(
 def q_stream_semdedup_index_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_semdedup_idx_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_semdedup_idx_")
     return run_semdedup_index_replay(spark, sf_dir, tmp)
 
 

@@ -30,11 +30,11 @@ integer until a single final division.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..llm import lexical as lx
 from ..llm import multimodal as lm
 from ..sources.tables import load_table
@@ -324,7 +324,7 @@ def run_manifest_replay(
     tags=("streaming", "llm", "pipeline", "manifest", "exactly-once"),
 )
 def q_stream_manifest_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_manifest_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_manifest_")
     return run_manifest_replay(spark, sf_dir, tmp)
 
 
@@ -349,7 +349,7 @@ def media_state_dir(spark: SparkSession, sf_dir: str) -> str:
         from ..operators.util import fan_out
         from .queries_ext7 import media_survivors_frame
 
-        tmp = tempfile.mkdtemp(prefix="media_state_")
+        tmp = tmpdirs.mkdtemp(prefix="media_state_")
         surv_sink = IdempotentParquetSink(os.path.join(tmp, "survivors"))
         vdrop_sink = IdempotentParquetSink(os.path.join(tmp, "vdrops"))
         docs = load_table(spark, sf_dir, "documents")
@@ -481,7 +481,7 @@ def bm25_state_dir(spark: SparkSession, sf_dir: str) -> str:
     corpus: the r11 'What's missing' item, closed."""
     key = os.path.abspath(sf_dir)
     if key not in _BM25_STATE_MEMO:
-        tmp = tempfile.mkdtemp(prefix="bm25_state_")
+        tmp = tmpdirs.mkdtemp(prefix="bm25_state_")
         post_sink = IdempotentParquetSink(os.path.join(tmp, "postings"))
         stats_sink = IdempotentParquetSink(os.path.join(tmp, "stats"))
         docs = load_table(spark, sf_dir, "documents").select(
@@ -575,7 +575,7 @@ def q_docs_bm25_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = docs.filter(F.col("doc_id") < cut)
     batch = docs.filter(F.col("doc_id") >= cut)
-    tmp = tempfile.mkdtemp(prefix="bm25_ingest_")
+    tmp = tmpdirs.mkdtemp(prefix="bm25_ingest_")
     post_sink = IdempotentParquetSink(os.path.join(tmp, "postings"))
     stats_sink = IdempotentParquetSink(os.path.join(tmp, "stats"))
     post_sink.write_batch(lx.postings_of(corpus), 0)
@@ -618,7 +618,7 @@ def q_docs_bm25_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     mod = _BM25_TAKEDOWN_MOD
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     deleted = docs.filter(F.col("doc_id") % mod == 0)
-    tmp = tempfile.mkdtemp(prefix="bm25_delete_")
+    tmp = tmpdirs.mkdtemp(prefix="bm25_delete_")
     post_sink = IdempotentParquetSink(os.path.join(tmp, "postings"))
     stats_sink = IdempotentParquetSink(os.path.join(tmp, "stats"))
     post_sink.write_batch(lx.postings_of(docs), 0)
@@ -670,7 +670,7 @@ def ivf_state_dir(spark: SparkSession, sf_dir: str) -> str:
     key = (os.path.abspath(sf_dir), _memo_key(emb))
     if key not in _IVF_STATE_MEMO:
         _state_memo_evict(_IVF_STATE_MEMO, key[0])
-        tmp = tempfile.mkdtemp(prefix="ivf_state_")
+        tmp = tmpdirs.mkdtemp(prefix="ivf_state_")
         sink = IdempotentParquetSink(os.path.join(tmp, "codes"))
         e = emb.select(
             "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -853,5 +853,5 @@ def run_bm25_index_replay(
 def q_stream_bm25_index_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_bm25_idx_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_bm25_idx_")
     return run_bm25_index_replay(spark, sf_dir, tmp)

@@ -12,12 +12,12 @@ for the oracle compare.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
 from pyspark.sql import functions as F
 
+from .. import tmpdirs
 from ..operators.dedup import DEDUP_ORACLE_SQL
 from .queries_ext4 import RETRACT_FINAL_ORACLE
 from ..sources.datagen import gen_events
@@ -80,7 +80,7 @@ LEFT JOIN customer c ON e.user_id = c.c_custkey
     tags=("streaming", "exactly-once", "stateful", "consistency"),
 )
 def q_stream_replay_enriched(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_replay_")  # outlives the returned plan
+    tmp = tmpdirs.mkdtemp(prefix="stream_replay_")  # outlives the returned plan
     # the same fixture file twice = a full replay of every key in batch 2
     events_dir = stage_replay_dir(sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
@@ -135,7 +135,7 @@ GROUP BY 1, 2, 3
     tags=("streaming", "window-agg", "watermark", "exactly-once"),
 )
 def q_stream_windowed_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_win_")  # outlives the returned plan
+    tmp = tmpdirs.mkdtemp(prefix="stream_win_")  # outlives the returned plan
     events_dir = _sentinel_replay_dir(spark, sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
     with replay_width(spark):
@@ -190,7 +190,7 @@ def q_stream_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import time as _time
 
-    tmp = tempfile.mkdtemp(prefix="stream_late_")  # outlives the plan
+    tmp = tmpdirs.mkdtemp(prefix="stream_late_")  # outlives the plan
     events_dir = _sentinel_replay_dir(spark, sf_dir, tmp)
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     now = _time.time()
@@ -302,7 +302,7 @@ JOIN events p
     tags=("streaming", "stream-stream-join", "watermark", "exactly-once"),
 )
 def q_stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_ssj_")  # outlives the returned plan
+    tmp = tmpdirs.mkdtemp(prefix="stream_ssj_")  # outlives the returned plan
     events_dir = stage_replay_dir(sf_dir, tmp, copies=1)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
     with replay_width(spark):
@@ -354,7 +354,7 @@ LEFT JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
     tags=("streaming", "stream-stream-join", "outer-join", "watermark"),
 )
 def q_stream_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_ssoj_")  # outlives the plan
+    tmp = tmpdirs.mkdtemp(prefix="stream_ssoj_")  # outlives the plan
     committed = _run_outer_join_replay(spark, sf_dir, tmp, how="left_outer")
     # the sentinel click's own outer row must never have been flushed
     return committed.select(
@@ -494,7 +494,7 @@ FULL JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
     tags=("streaming", "stream-stream-join", "outer-join", "watermark"),
 )
 def q_stream_full_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_ssfj_")  # outlives the plan
+    tmp = tmpdirs.mkdtemp(prefix="stream_ssfj_")  # outlives the plan
     committed = _run_outer_join_replay(spark, sf_dir, tmp, how="full_outer")
     return committed.select(
         "user_id",
@@ -554,7 +554,7 @@ WHERE c.event_type = 'click'
 def q_stream_abandoned_clicks_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_abandon_")  # outlives the plan
+    tmp = tmpdirs.mkdtemp(prefix="stream_abandon_")  # outlives the plan
     events_dir = _staged_sentinel_drain_dir(
         spark, sf_dir, tmp, ((-1, -1, "sentinel"),)
     )
@@ -617,7 +617,7 @@ GROUP BY user_id, sid
     tags=("streaming", "session-window", "watermark", "exactly-once"),
 )
 def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_ssn_")  # outlives the returned plan
+    tmp = tmpdirs.mkdtemp(prefix="stream_ssn_")  # outlives the returned plan
     events_dir = _sentinel_replay_dir(spark, sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
     with replay_width(spark):
@@ -684,7 +684,7 @@ GROUP BY user_id
 def q_stream_stateful_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.stateful import running_user_totals_cents
 
-    tmp = tempfile.mkdtemp(prefix="stream_stateful_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_stateful_")
     events_dir = stage_replay_dir(sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
     stream = read_events_stream(spark, events_dir, max_files_per_trigger=1)
@@ -728,7 +728,7 @@ def q_stream_retract_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import cdc
     from .queries_ext4 import RETRACT_ROW_SCHEMA, synth_changelog_wire
 
-    tmp = tempfile.mkdtemp(prefix="stream_retract_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_retract_")
     # same fixture file twice + maxFilesPerTrigger=1 -> two micro-batches
     events_dir = stage_replay_dir(sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
@@ -829,7 +829,7 @@ FROM sketch
     tags=("streaming", "sketch", "hll", "exactly-once", "consistency"),
 )
 def q_stream_sketch_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tmp = tempfile.mkdtemp(prefix="stream_sketch_")
+    tmp = tmpdirs.mkdtemp(prefix="stream_sketch_")
     # same fixture file twice + maxFilesPerTrigger=1 -> two micro-batches
     events_dir = stage_replay_dir(sf_dir, tmp)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))

@@ -23,16 +23,32 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """Driver heap for ``get_spark``: ``$SPARK_GRAFT_DRIVER_MEM``, else
+    half of the host's physical memory. In local mode the driver heap
+    is also all executor memory; the other half leaves room for the
+    JVM's off-heap memory, the Python workers and the page cache."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    host = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{host // 2 // 2**20}m"
+
+
 @contextmanager
 def pinned_conf(spark: SparkSession, key: str, value: str):
     """Set one session conf for the ``with`` body and restore the
-    caller's value after, also when the body raises."""
-    saved = spark.conf.get(key)
+    caller's value after, also when the body raises. A key the caller
+    had not set is unset again."""
+    saved = spark.conf.get(key, None)
     spark.conf.set(key, value)
     try:
         yield
     finally:
-        spark.conf.set(key, saved)
+        if saved is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, saved)
 
 
 def get_spark(
@@ -73,9 +89,8 @@ def get_spark(
         # -- quieter local runs -----------------------------------------
         .config("spark.ui.enabled", "false")
         # single-JVM local mode: driver heap IS executor memory for all
-        # 32 task threads; 12M-group window aggs at sf0.1 need GC
-        # headroom or cross-query full-GC debt distorts timings
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        # task threads, sized from the host (default_driver_memory)
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

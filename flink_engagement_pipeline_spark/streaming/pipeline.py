@@ -12,10 +12,11 @@ fan-out + windowed aggregation — as one micro-batch pipeline:
 - time: event time + watermark (deliberate upgrade from the
   reference's PROCTIME, SURVEY §4.3.2);
 - upsert semantics: per-micro-batch ``latest_per_key`` (reference's
-  RowKind INSERT/UPDATE_AFTER filter, SURVEY §2 T4/F1). Cross-batch
-  keyed state would use dropDuplicatesWithinWatermark; the fixture
-  replay delivers each key's versions within one batch, and the batch
-  oracle query (latest_per_key) checks the full-history semantics;
+  RowKind INSERT/UPDATE_AFTER filter, SURVEY §2 T4/F1), or cross-batch
+  keyed state (``dropDuplicates``), after which every key is unique
+  and the enrichment is planned once, as part of the streaming query;
+  the batch oracle query (latest_per_key) checks the full-history
+  semantics;
 - enrichment: the *same* ``enrich_events`` function as the batch path
   (stream-static broadcast join re-evaluates the dim per micro-batch =
   the lookup join's FOR SYSTEM_TIME AS OF semantics at batch
@@ -31,6 +32,8 @@ fan-out + windowed aggregation — as one micro-batch pipeline:
 from __future__ import annotations
 
 import os
+from contextlib import nullcontext
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -49,13 +52,36 @@ from .sinks import Sink
 
 DEFAULT_WATERMARK = "1 minute"
 
-# Shuffle width of the fixture replays. A stateful operator allocates
-# one state store per shuffle partition per micro-batch: a vanilla
-# driver session's 200 partitions cost ~15 s of store setup for a
-# fixture-sized batch. Replays pin this width for the streaming run
-# only and restore the caller's conf after (each replay's checkpoint
-# is fresh, so the locked-in state width never conflicts).
+# Shuffle width of the fixture replays. A stateful operator keeps one
+# state store per shuffle partition, and each store commits 2
+# checkpoint files per micro-batch (its state delta and the delta's
+# checksum file): a vanilla driver session's 200 partitions write 400
+# files per batch, ~15 s for a fixture-sized batch. Replays pin this
+# width for the streaming run only and restore the caller's conf after
+# (each replay's checkpoint is fresh, so the locked-in state width
+# never conflicts).
 REPLAY_SHUFFLE_PARTITIONS = 8
+
+# Checkpoint file manager for local checkpoint dirs. Spark's default
+# (FileContextBasedCheckpointFileManager) goes through Hadoop's
+# FileContext, and without Hadoop's native library RawLocalFileSystem
+# forks shell commands for it: 8 readlink and 2 chmod per atomic file.
+# A batch writes 3 such files (offsets, commits, the source log) plus 2
+# per state partition (its state delta and the delta's checksum). The
+# FileSystem-based manager writes the same files, Spark's checksums
+# and Hadoop's .crc files included, forking only the 2 chmod, and
+# overwriteIfPossible=false still raises FileAlreadyExists. The one
+# difference: on local disk overwriteIfPossible=true keeps the
+# existing file (and leaves the temp file beside it) where the default
+# replaces it. Spark's contract calls that overwrite "best effort"; it
+# only touches a re-executed batch's state delta and checksum, and
+# re-executing a batch writes the same state (the crash/restart tests
+# in tests/test_streaming.py and tests/test_ext7.py run that path).
+CHECKPOINT_FILE_MANAGER_CONF = "spark.sql.streaming.checkpointFileManagerClass"
+LOCAL_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
 
 
 def replay_width(spark: SparkSession):
@@ -85,20 +111,37 @@ def stage_replay_dir(
     return data_dir
 
 
+def checkpoint_file_manager(checkpoint_dir: str, default_fs: str) -> str | None:
+    """The checkpoint file manager to pin for ``checkpoint_dir``:
+    ``LOCAL_CHECKPOINT_FILE_MANAGER`` when the dir is on the local file
+    system (scheme ``file``, or no scheme and a local ``default_fs``),
+    else None, which keeps Spark's default (hdfs://, s3a://, ...)."""
+    scheme = urlparse(checkpoint_dir).scheme or urlparse(default_fs).scheme
+    return LOCAL_CHECKPOINT_FILE_MANAGER if scheme in ("", "file") else None
+
+
 def run_stream(
     out: DataFrame, write, checkpoint_dir: str, output_mode: str = "append"
 ) -> None:
     """Drain the streaming frame ``out`` to completion (availableNow)
     through ``write(batch_df, batch_id)``: the one place a stream
-    starts."""
-    (
-        out.writeStream.foreachBatch(write)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
+    starts. A local checkpoint dir is written through
+    ``LOCAL_CHECKPOINT_FILE_MANAGER`` for the stream's lifetime."""
+    spark = out.sparkSession
+    default_fs = spark.sparkContext._jsc.hadoopConfiguration().get("fs.defaultFS")
+    manager = checkpoint_file_manager(checkpoint_dir, default_fs)
+    pin = nullcontext()
+    if manager is not None:
+        pin = pinned_conf(spark, CHECKPOINT_FILE_MANAGER_CONF, manager)
+    with pin:
+        (
+            out.writeStream.foreachBatch(write)
+            .outputMode(output_mode)
+            .option("checkpointLocation", checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
 
 
 def with_proc_time(df: DataFrame) -> DataFrame:
@@ -130,15 +173,6 @@ def read_events_stream(
     return normalize_events(stream) if is_nanos else stream
 
 
-def enriched_stream(
-    spark: SparkSession, events: DataFrame, sf_dir: str
-) -> DataFrame:
-    """Dedup + broadcast-enrich a (streaming) events frame; identical
-    code path to the batch `enrich_events` query."""
-    dim = load_table(spark, sf_dir, "customer")
-    return enrich_events(latest_per_key(events), dim)
-
-
 def run_enriched_fanout(
     spark: SparkSession,
     events_dir: str,
@@ -156,17 +190,24 @@ def run_enriched_fanout(
     ``cross_batch_dedup`` turns on *stateful* key dedup
     (``dropDuplicates`` on the upsert key): a key replayed in a later
     micro-batch is suppressed — the reference's PRIMARY-KEY-upsert
-    semantics across batches, not just within one. State grows with
-    the key space; a production deployment with unbounded keys bounds
-    it via ``dropDuplicatesWithinWatermark`` instead.
+    semantics across batches, not just within one. Every key is then
+    unique, so the per-batch ``latest_per_key`` would be the identity:
+    the enrichment is planned once, as part of the streaming query,
+    and each batch only persists and fans out. Without it,
+    ``latest_per_key`` (a window function, which a stream cannot run)
+    and the enrichment are built per batch. State grows with the key
+    space; a production deployment with unbounded keys bounds it via
+    ``dropDuplicatesWithinWatermark`` instead.
     """
     stream = read_events_stream(spark, events_dir, max_files_per_trigger)
-    if cross_batch_dedup:
-        stream = stream.dropDuplicates(["event_id"])
     dim = load_table(spark, sf_dir, "customer")
+    if cross_batch_dedup:
+        stream = enrich_events(stream.dropDuplicates(["event_id"]), dim)
 
     def _process(batch_df: DataFrame, batch_id: int) -> None:
-        enriched = enrich_events(latest_per_key(batch_df), dim).persist()
+        if not cross_batch_dedup:
+            batch_df = enrich_events(latest_per_key(batch_df), dim)
+        enriched = batch_df.persist()
         try:
             for sink in sinks.values():
                 sink.write_batch(enriched, batch_id)

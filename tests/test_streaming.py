@@ -84,6 +84,81 @@ def test_cross_batch_stateful_dedup(spark, doubled_events_dir, tmp_path):
     assert sorted(map(tuple, mem.rows)) == _batch_enriched_rows(spark)
 
 
+def test_cross_batch_fanout_plans_enrichment_once(
+    spark, doubled_events_dir, tmp_path, monkeypatch
+):
+    """With cross-batch dedup every key is unique, so a multi-batch
+    fan-out plans the enrichment once per run, as part of the stream,
+    and never builds the per-batch latest_per_key."""
+    calls = {"enrich_events": 0, "latest_per_key": 0}
+
+    def counted(name):
+        fn = getattr(sp, name)
+
+        def wrapped(*args, **kwargs):
+            calls[name] += 1
+            return fn(*args, **kwargs)
+
+        monkeypatch.setattr(sp, name, wrapped)
+
+    counted("enrich_events")
+    counted("latest_per_key")
+    mem = sk.MemorySink()
+    sp.run_enriched_fanout(
+        spark,
+        doubled_events_dir,
+        SF,
+        {"mem": mem},
+        str(tmp_path / "ckpt"),
+        cross_batch_dedup=True,
+        max_files_per_trigger=1,
+    )
+    assert len(mem.batches) >= 2
+    assert calls == {"enrich_events": 1, "latest_per_key": 0}
+    assert sorted(map(tuple, mem.rows)) == _batch_enriched_rows(spark)
+
+
+@pytest.mark.parametrize(
+    "before",
+    [
+        None,
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileContextBasedCheckpointFileManager",
+    ],
+)
+def test_run_stream_pins_local_checkpoint_manager(spark, events_dir, tmp_path, before):
+    """A stream with a local checkpoint dir runs with the FileSystem-based
+    checkpoint file manager, and run_stream leaves the caller's conf as
+    it found it, set or unset."""
+    key = sp.CHECKPOINT_FILE_MANAGER_CONF
+    if before is None:
+        spark.conf.unset(key)
+    else:
+        spark.conf.set(key, before)
+    seen = []
+    try:
+        sp.run_stream(
+            sp.read_events_stream(spark, events_dir),
+            lambda df, _: seen.append(df.sparkSession.conf.get(key, None)),
+            str(tmp_path / "ckpt"),
+        )
+        assert seen == [sp.LOCAL_CHECKPOINT_FILE_MANAGER]
+        assert spark.conf.get(key, None) == before
+    finally:
+        spark.conf.unset(key)
+
+
+def test_checkpoint_manager_switches_local_dirs_only():
+    local = sp.LOCAL_CHECKPOINT_FILE_MANAGER
+    assert sp.checkpoint_file_manager("/tmp/ckpt", "file:///") == local
+    assert sp.checkpoint_file_manager("ckpt", "file:///") == local
+    assert sp.checkpoint_file_manager("file:///tmp/ckpt", "file:///") == local
+    assert sp.checkpoint_file_manager("file:/tmp/ckpt", "hdfs://nn:8020") == local
+    assert sp.checkpoint_file_manager("hdfs://nn:8020/ckpt", "file:///") is None
+    assert sp.checkpoint_file_manager("s3a://bucket/ckpt", "file:///") is None
+    assert sp.checkpoint_file_manager("/ckpt", "hdfs://nn:8020") is None
+
+
 def test_multi_sink_fanout(spark, events_dir, tmp_path):
     mem = sk.MemorySink()
     pq = sk.ParquetSink(str(tmp_path / "out-parquet"))
