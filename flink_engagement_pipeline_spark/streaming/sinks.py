@@ -50,14 +50,6 @@ def fold_op_rows(rows: DataFrame) -> DataFrame:
     )
 
 
-def live_op_rows(rows: DataFrame) -> DataFrame:
-    """Serve-side fold companion of :func:`fold_op_rows`: the live
-    index rows (net op > 0), op dropped — what the family's
-    pairs-from-index tail reads."""
-    cols = [c for c in rows.columns if c != "op"]
-    return fold_op_rows(rows).filter(F.col("op") > 0).select(*cols)
-
-
 def _execute(df: DataFrame) -> None:
     """Run a micro-batch to completion and discard its rows. A sink
     that skips a redelivered batch must still execute it: stateful

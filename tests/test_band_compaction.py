@@ -27,7 +27,6 @@ from flink_engagement_pipeline_spark.sources.tables import load_table
 from flink_engagement_pipeline_spark.streaming.sinks import (
     IdempotentParquetSink,
     fold_op_rows,
-    live_op_rows,
 )
 
 
@@ -52,13 +51,13 @@ def _roundtrip(spark, tmp_path, index, tomb_pred, keep_pred):
     raw_before = sink.read_committed(spark).count()
     # read-side fold over the raw union must already serve the
     # rebuild-without-X rows
-    live_raw = _rows(live_op_rows(sink.read_committed(spark)))
+    live_raw = _rows(fold_op_rows(sink.read_committed(spark)).filter("op > 0"))
     sink.compact(spark, transform=fold_op_rows)
     dirs = sink.committed_paths()
     state = sink.read_committed(spark)
     raw_after = state.count()
-    live_after = _rows(live_op_rows(state))
-    rebuild = _rows(index.filter(keep_pred))
+    live_after = _rows(fold_op_rows(state).filter("op > 0"))
+    rebuild = _rows(index.filter(keep_pred).withColumn("op", F.lit(1)))
     assert live_raw == rebuild
     return live_after, rebuild, raw_before, raw_after, dirs
 
@@ -117,7 +116,7 @@ def test_minhash_fold_serves_identically(spark, sf_dir, tmp_path):
     )
     sink.write_batch(tombs, 1)
     sink.compact(spark, transform=fold_op_rows)
-    kept_state = live_op_rows(sink.read_committed(spark))
+    kept_state = fold_op_rows(sink.read_committed(spark)).filter("op > 0")
     served = _rows(ld.portable_pairs_from_index(kept_state, base))
     rebuilt = _rows(
         ld.portable_pairs_from_index(index.filter(~tomb), base)

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -102,13 +101,13 @@ def test_pq_serve_from_state_matches_build_artifact(spark, sf_dir):
     assert state == memo
 
 
-def test_pq_replay_compaction_and_rebuild(spark, sf_dir):
+def test_pq_replay_compaction_and_rebuild(spark, sf_dir, tmp_path):
     """The streaming maintenance loop: parity batches commit op-signed
     code deltas; policy compaction (max_live_deltas=1) must actually
     fire mid-stream THROUGH the family's semantic transform, and the
     final folded state must equal the whole-corpus rebuild under the
     pinned quantizers (stream == batch, state-level)."""
-    tmp = tempfile.mkdtemp(prefix="pq_replay_pin_")
+    tmp = str(tmp_path)
     final = _rows(e10.run_pq_index_replay(spark, sf_dir, tmp))
     emb = load_table(spark, sf_dir, "embeddings")
     books, coarse = e10._pq_quantizers(emb)
@@ -211,7 +210,7 @@ def test_hybrid_batch_ivf_dense_consistent_with_single(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def test_bm25_physical_compaction_state_and_serve(spark, sf_dir):
+def test_bm25_physical_compaction_state_and_serve(spark, sf_dir, tmp_path):
     """The compaction cell's three contracts (r12 verdict ask #4):
     (1) the compacted postings base equals postings_of(remaining docs)
     BIT-FOR-BIT (fold == rebuild-without-X, now PHYSICAL); (2) state
@@ -233,7 +232,7 @@ def test_bm25_physical_compaction_state_and_serve(spark, sf_dir):
     mod = _BM25_TAKEDOWN_MOD
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     deleted = docs.filter(F.col("doc_id") % mod == 0)
-    tmp = tempfile.mkdtemp(prefix="bm25_compact_pin_")
+    tmp = str(tmp_path)
     post_sink = IdempotentParquetSink(os.path.join(tmp, "postings"))
     stats_sink = IdempotentParquetSink(os.path.join(tmp, "stats"))
     post_sink.write_batch(lx.postings_of(docs), 0)

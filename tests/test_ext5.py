@@ -552,13 +552,13 @@ def test_knn_graph_refuses_oversized_corpus(spark):
 # ---------------------------------------------------------------------------
 
 
-def _write_event_file(spark, rows, path):
+def _write_event_file(spark, rows, path, stage):
     """One parquet file of (event_id, ts_us, user_id, event_type)
     rows, built JVM-side (a Python createDataFrame write costs ~5 s
-    flat — the sentinel-staging rule in queries_stream.py)."""
+    flat — the sentinel-staging rule in queries_stream.py), written
+    through the scratch dir ``stage``."""
     import glob
     import shutil
-    import tempfile
 
     df = spark.range(1).select(
         F.inline(
@@ -577,7 +577,6 @@ def _write_event_file(spark, rows, path):
             )
         )
     )
-    stage = tempfile.mkdtemp()
     df.coalesce(1).write.mode("overwrite").parquet(stage)
     (part,) = glob.glob(os.path.join(stage, "part-*.parquet"))
     shutil.copy(part, path)
@@ -625,7 +624,7 @@ def test_abandoned_clicks_state_machine(spark, tmp_path):
     now = _time.time()
     for i, rows in enumerate(batches):
         f = str(ev_dir / f"{chr(97 + i)}.parquet")
-        _write_event_file(spark, rows, f)
+        _write_event_file(spark, rows, f, str(tmp_path / "stage"))
         os.utime(f, (now + 60 * i, now + 60 * i))
     stream = (
         spark.readStream.schema(
@@ -701,7 +700,7 @@ def test_abandoned_clicks_cross_batch_purchase_before_click(spark, tmp_path):
     now = _time.time()
     for i, rows in enumerate(batches):
         f = str(ev_dir / f"{chr(97 + i)}.parquet")
-        _write_event_file(spark, rows, f)
+        _write_event_file(spark, rows, f, str(tmp_path / "stage"))
         os.utime(f, (now + 60 * i, now + 60 * i))
     stream = (
         spark.readStream.schema(

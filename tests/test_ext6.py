@@ -6,7 +6,6 @@ to the batch, and snapshot compaction transparent to readers."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -28,11 +27,11 @@ from flink_engagement_pipeline_spark.streaming.sinks import (
 
 
 @pytest.fixture(scope="module")
-def replay_run(spark, sf_dir):
+def replay_run(spark, sf_dir, tmp_path_factory):
     """One shared streaming replay run: (state tmp dir, result rows).
     The replay is a real Structured Streaming job (~6-10 s); every
     test below asserts against this single execution."""
-    tmp = tempfile.mkdtemp(prefix="test_minhash_idx_")
+    tmp = str(tmp_path_factory.mktemp("minhash_idx"))
     rows = run_minhash_index_replay(spark, sf_dir, tmp).collect()
     return tmp, rows
 
@@ -205,20 +204,18 @@ def test_stream_index_maintenance_with_midstream_compaction(spark, sf_dir, tmp_p
     assert got == want and want
 
 
-def test_stream_simhash_replay_matches_batch_rebuild(spark, sf_dir):
+def test_stream_simhash_replay_matches_batch_rebuild(spark, sf_dir, tmp_path):
     """The SimHash instance of delta-append maintenance: the union of
     per-batch pair deltas must equal the whole-corpus
     simhash_near_pairs rebuild, each index delta must contain only its
     own parity half, and the batch's corpus-side input must be the
     index alone (structural: streaming_simhash_ingest_pairs takes no
     text argument)."""
-    import tempfile
-
     from flink_engagement_pipeline_spark.plans.queries_ext6 import (
         run_simhash_index_replay,
     )
 
-    tmp = tempfile.mkdtemp(prefix="test_simhash_idx_")
+    tmp = str(tmp_path)
     got = {
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in run_simhash_index_replay(spark, sf_dir, tmp).collect()
@@ -261,19 +258,17 @@ def test_streaming_simhash_ingest_arrival_order(spark):
     ]
 
 
-def test_stream_media_phash_replay_matches_batch_rebuild(spark, sf_dir):
+def test_stream_media_phash_replay_matches_batch_rebuild(spark, sf_dir, tmp_path):
     """Media pHash streaming maintenance: the union of per-batch pair
     deltas equals the whole-corpus media_phash_pairs rebuild, and
     each index delta holds only its parity half (delta-append, never
     a full-state rewrite)."""
-    import tempfile
-
     from flink_engagement_pipeline_spark.llm import multimodal as lm
     from flink_engagement_pipeline_spark.plans.queries_ext6 import (
         run_media_phash_index_replay,
     )
 
-    tmp = tempfile.mkdtemp(prefix="test_phash_idx_")
+    tmp = str(tmp_path)
     got = {
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in run_media_phash_index_replay(spark, sf_dir, tmp).collect()

@@ -8,7 +8,6 @@ fullmatch, knn_graph lazy guard)."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -174,7 +173,7 @@ def test_redelivered_batch_racing_bounded_compaction(spark, sf_dir, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_stream_neardup_replay_matches_batch_rebuild(spark, sf_dir):
+def test_stream_neardup_replay_matches_batch_rebuild(spark, sf_dir, tmp_path):
     """The hyperplane-LSH instance of delta-append maintenance: the
     union of per-batch pair deltas equals the whole-corpus
     near_dup_pairs rebuild; the mid-stream POLICY compaction fired
@@ -185,7 +184,7 @@ def test_stream_neardup_replay_matches_batch_rebuild(spark, sf_dir):
         run_neardup_index_replay,
     )
 
-    tmp = tempfile.mkdtemp(prefix="test_neardup_idx_")
+    tmp = str(tmp_path)
     got = {
         (r["vec_a"], r["vec_b"], round(r["cosine"], 9))
         for r in run_neardup_index_replay(spark, sf_dir, tmp).collect()
@@ -288,7 +287,7 @@ def test_neardup_index_replay_restarts_after_crash(
     assert got == want and all(want)
 
 
-def test_stream_ivf_replay_matches_pinned_rebuild(spark, sf_dir):
+def test_stream_ivf_replay_matches_pinned_rebuild(spark, sf_dir, tmp_path):
     """IVF codes maintenance under the pinned quantizer: the union of
     per-batch (vec_id, cluster) deltas equals assigning the WHOLE
     corpus against the offline-trained centroids (append == rebuild,
@@ -298,7 +297,7 @@ def test_stream_ivf_replay_matches_pinned_rebuild(spark, sf_dir):
         run_ivf_index_replay,
     )
 
-    tmp = tempfile.mkdtemp(prefix="test_ivf_idx_")
+    tmp = str(tmp_path)
     got = sorted(
         (r["vec_id"], r["cluster"])
         for r in run_ivf_index_replay(spark, sf_dir, tmp).collect()
@@ -408,7 +407,7 @@ def test_media_video_pairs_consistent_with_doc_phash(spark, sf_dir):
         assert r["match_frac"] >= 0.5
 
 
-def test_stream_media_video_replay_matches_batch_rebuild(spark, sf_dir):
+def test_stream_media_video_replay_matches_batch_rebuild(spark, sf_dir, tmp_path):
     """Video frame-index streaming maintenance: the union of
     per-batch scored-pair deltas equals the whole-corpus
     media_video_neardup rebuild (counts, denominators, and fractions
@@ -418,7 +417,7 @@ def test_stream_media_video_replay_matches_batch_rebuild(spark, sf_dir):
         run_media_video_index_replay,
     )
 
-    tmp = tempfile.mkdtemp(prefix="test_video_idx_")
+    tmp = str(tmp_path)
     pk = lambda r: (  # noqa: E731
         r["doc_a"], r["doc_b"], r["matched_a"], r["matched_b"],
         r["frames_a"], r["frames_b"], round(r["match_frac"], 9),

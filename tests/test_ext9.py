@@ -5,7 +5,6 @@ from __future__ import annotations
 
 import os
 import re
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
@@ -88,7 +87,7 @@ def test_manifest_delete_resurrection_non_vacuous_sf01(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_manifest_replay_served_positions_stable(spark, sf_dir):
+def test_manifest_replay_served_positions_stable(spark, sf_dir, tmp_path):
     """Served-position stability through the STREAM path: batch 0's
     committed rows must be byte-identical in the final state (appends
     never shift earlier positions — the resume-mid-epoch contract the
@@ -98,7 +97,7 @@ def test_manifest_replay_served_positions_stable(spark, sf_dir):
         IdempotentParquetSink,
     )
 
-    tmp = tempfile.mkdtemp(prefix="manifest_replay_pin_")
+    tmp = str(tmp_path)
     final = {
         (r["doc_id"]): (r["split"], r["sample_idx"])
         for r in e9.run_manifest_replay(spark, sf_dir, tmp).collect()

@@ -10,7 +10,19 @@ tests/test_registry_oracle.py on each query's own executed plan.
 
 from __future__ import annotations
 
-from flink_engagement_pipeline_spark.plans import REGISTRY
+import os
+
+from flink_engagement_pipeline_spark.plans import REGISTRATION_ORDER, REGISTRY
+from flink_engagement_pipeline_spark.plans.window import (
+    MAX_REPLAYS,
+    REPROVE,
+    SENTINELS,
+    WINDOW,
+    load_records,
+    proofs,
+)
+
+REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _plan(spark, sf_dir, name: str) -> str:
@@ -371,107 +383,37 @@ def test_runtime_bloom_filter_join(spark, sf_dir):
 
 
 def test_gate_priority_window_covers_graded_surface():
-    """The driver's correctness gate evaluates only the FIRST 50
-    registered queries, and the window ROTATES per round so every
-    query eventually gets an external driver-oracle row (policy text:
-    plans/__init__.py). This pins the round-15 rotation (the second
-    OPTIMIZATION round — no new queries): [b] = the 10 queries whose
-    plans or value paths materially changed under the round's
-    output-identical optimizations (CC small-graph gate,
-    manifest-ingest state-prep checkpoint, hex-prefix range id —
-    the mechanical gen_plans skeleton diff plus the __pid
-    expression-level changes), re-entering by the [b] rule so the
-    external gate re-proves every hash unchanged; [c] = the
-    round-9-checked remainder, then the 10 oldest round-10-checked.
-    POLICY AMENDMENT (r14 verdict #4): oracle=None queries are
-    excluded from the window — the driver grades them no_oracle,
-    proving nothing; zero no-oracle rows in-window from r15 on.
-    Streaming budget: 4 replays in-window. Window budget:
-    hop_engagement_sum stays the single multi-million-row output."""
+    """The driver's correctness gate checks only the first 50 registered
+    queries, which plans/window.py computes from the committed
+    CORRECTNESS records. The live REGISTRY holds the window's rules:
+    sentinels first, then every oracled query still owed a proof,
+    then a backfill by oldest proof that skips a query only under the
+    replay or big-output cap; no no-oracle query anywhere in it."""
+    proven, big = proofs(load_records(REPO_ROOT))
     names = list(REGISTRY)
-    window = names[:50]
-    sentinels = [
-        "enrich_events", "latest_per_key", "hop_engagement_sum",
-        "docs_exact_dedup", "docs_jaccard_pairs",
-        "docs_minhash_portable",
-    ]
-    new_in_r15: list[str] = [
-        # every query registered during round 15 MUST be appended here
-        # (and to _PRIORITY) the round it is added, displacing one
-        # backfill entry from the tail each; materially-changed
-        # queries re-enter here too (policy class [b]) — round 15 is
-        # an optimization round, so the block is ALL re-entries: the
-        # CC small-graph gate's 4 oracled skeleton drifts (the 5th,
-        # docs_dedup_e2e, is oracle=None and excluded by the r15
-        # policy amendment — no-oracle rows prove nothing externally),
-        # the manifest-ingest state-prep checkpoint, and the 5 queries
-        # whose __pid expressions changed under the hex-prefix range
-        # id (values re-proven by the external gate); second r15
-        # commit batch: the single-split fan_out fix (media pHash +
-        # video families, skeleton diff) and the semdedup screen
-        # fan_out-before-checkpoint (value-path change behind the
-        # checkpoint, skeleton identical — the hex-prefix precedent)
-        "docs_dedup_e2e_portable",
-        "docs_dedup_clusters",
-        "docs_dedup_survivors_quality",
-        "media_dedup_survivors",
-        "docs_manifest_ingest",
-        "corpus_manifest_multimodal",
-        "corpus_manifest_from_state",
-        "docs_manifest_delete",
-        "docs_training_manifest",
-        "docs_epoch_order",
-        "media_phash_neardup",
-        "media_phash_ingest",
-        "media_phash_index_delete",
-        "media_video_neardup",
-        "media_video_ingest",
-        "media_video_index_delete",
-        "embedding_semdedup",
-        "embedding_semdedup_delete",
-        # concurrent corpus/batch encode+write jobs (§2.6 overlap):
-        "embedding_pq_ingest",
-    ]
-    backfill = [
-        # last driver row: the CORRECTNESS_r09.json remainder in
-        # registry order (streaming budget: 4 of its 8 replays carry,
-        # stream_session/minhash/simhash/media_phash_index replays
-        # defer to r16), then the oldest CORRECTNESS_r10.json rows
-        "events_hdr_quantiles", "cdc_retract_agg",
-        "events_partitioned_prune", "hll_portable_reach",
-        "orders_scd2_history", "lineitem_bucketed_join",
-        "stream_replay_enriched", "stream_windowed_replay",
-        "stream_join_replay", "stream_abandoned_clicks_replay",
-        "embedding_kmeans", "embedding_pq_adc", "embedding_quantize",
-        "docs_bm25", "docs_unigram_logprob", "events_ewma",
-        "docs_minhash_ingest", "docs_pmi_bigrams",
-        "docs_quality_deciles", "docs_simhash_index_delete",
-        "embedding_neardup_index_delete",
-        # (the media_phash trio moved from here to the [b] block when
-        # the fan_out fix changed their skeletons mid-round)
-        "cube_returnflag_status", "promo_revenue",
-        "top_users_per_type", "events_from_buyers",
-        "events_from_non_buyers", "heavy_users", "user_value_median",
-        "docs_tfidf", "orders_events_interval_join",
-        "events_bloom_prune",
-    ]
-    expected = (
-        sentinels + new_in_r15
-        + backfill[: 50 - 6 - len(new_in_r15)]
-    )
-    # r15 policy amendment: zero no-oracle rows in-window
-    assert all(REGISTRY[n].oracle is not None for n in expected)
-    assert window == expected, (
-        [n for n in expected if n not in window],
-        [n for n in window if n not in expected],
-    )
-    # streaming budget: 4 replays in-window — the 4 oldest r9-checked
-    # (the other 4 r9 replays defer to r16 per the policy text)
-    streaming = [n for n in window if n.startswith("stream_")]
-    assert streaming == [
-        "stream_replay_enriched", "stream_windowed_replay",
-        "stream_join_replay", "stream_abandoned_clicks_replay",
-    ], streaming
+    window = names[:WINDOW]
+    assert names[WINDOW:] == [n for n in REGISTRATION_ORDER if n not in window]
+    assert tuple(window[: len(SENTINELS)]) == SENTINELS
+    assert all(REGISTRY[n].oracle is not None for n in window)
+    assert len([n for n in window if n in big]) <= 1
+
+    def owed(n):
+        return proven.get(n) is None or proven[n] < REPROVE.get(n, 0)
+
+    oracled = [n for n in REGISTRATION_ORDER if REGISTRY[n].oracle is not None]
+    first_proof = [n for n in oracled if owed(n) and n not in SENTINELS]
+    assert set(first_proof) <= set(window)
+    backfill = window[len(SENTINELS) + len(first_proof):]
+    assert not any(owed(n) for n in backfill)
+    assert [proven[n] for n in backfill] == sorted(proven[n] for n in backfill)
+    assert len([n for n in backfill if n.startswith("stream_")]) <= MAX_REPLAYS
+
+    def capped(n):
+        return n.startswith("stream_") or n in big
+
+    newest = max(proven[n] for n in backfill if not capped(n))
+    left_out = [n for n in oracled if n not in window and not capped(n)]
+    assert all(proven[n] >= newest for n in left_out)
 
 
 def test_global_row_number_no_single_partition(spark, sf_dir):
@@ -1528,3 +1470,18 @@ def test_plan_snapshots_no_drift(spark):
         f"plan skeleton drift in {drifted} — run tools/gen_plans.py "
         "--diff, decide intended-vs-regression, regenerate if intended"
     )
+
+
+def test_registry_md_is_current():
+    """REGISTRY.md is tools/gen_registry.py's rendering of the live
+    REGISTRY, gate-window order included: a new query or a new
+    CORRECTNESS record changes it. No Spark session."""
+    import importlib.util
+
+    spec = importlib.util.spec_from_file_location(
+        "gen_registry", os.path.join(REPO_ROOT, "tools", "gen_registry.py")
+    )
+    gr = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gr)
+    with open(gr.OUT) as f:
+        assert f.read() == gr.render(), "run python tools/gen_registry.py"

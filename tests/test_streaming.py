@@ -1127,7 +1127,6 @@ def test_union_of_streams_uses_min_watermark(spark, tmp_path):
     import glob as _glob
     import os as _os
     import shutil as _shutil
-    import tempfile as _tempfile
     import time as _time
 
     SCHEMA = (
@@ -1154,7 +1153,7 @@ def test_union_of_streams_uses_min_watermark(spark, tmp_path):
                 )
             )
         )
-        stage = _tempfile.mkdtemp()
+        stage = str(tmp_path / "stage")
         df.coalesce(1).write.mode("overwrite").parquet(stage)
         (part,) = _glob.glob(_os.path.join(stage, "part-*.parquet"))
         _shutil.copy(part, path)

@@ -24,7 +24,6 @@ from flink_engagement_pipeline_spark.sources.tables import load_table  # noqa: E
 from flink_engagement_pipeline_spark.streaming.sinks import (  # noqa: E402
     IdempotentParquetSink,
     fold_op_rows,
-    live_op_rows,
 )
 
 
@@ -69,7 +68,7 @@ def main() -> None:
             rows_per.append(
                 (sink.read_committed(spark).count(), du(tmp))
             )
-        live = live_op_rows(sink.read_committed(spark)).count()
+        live = fold_op_rows(sink.read_committed(spark)).filter("op > 0").count()
         results[mode] = (rows_per, live)
         print(f"mode={mode}: live rows at end = {live}")
         for i, (r, b) in enumerate(rows_per):

@@ -6,7 +6,10 @@ navigate the registry without walking the eleven plans/ modules.
 Usage: python tools/gen_registry.py   # rewrites REGISTRY.md
 
 No Spark session is needed — this reads only registration metadata.
-Run after adding queries, alongside tools/gen_plans.py.
+Run after adding queries (alongside tools/gen_plans.py) and after a new
+CORRECTNESS_r*.json record lands: both change the gate-window order.
+tests/test_plans.py::test_registry_md_is_current compares the file with
+render().
 """
 
 from __future__ import annotations
@@ -18,11 +21,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from flink_engagement_pipeline_spark.plans import REGISTRY  # noqa: E402
 
+OUT = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "REGISTRY.md"
+)
+
 HEADER = """# REGISTRY — generated query index
 
 Generated by `python tools/gen_registry.py`. One row per registered
 query, in REGISTRY order (the first 50 form the driver's correctness
-gate window — rotation policy in `plans/__init__.py`). Verification:
+gate window, computed by `plans/window.py`). Verification:
 `oracle` = exact DuckDB hash-match under the driver gate;
 `rows-only` = no SQL-expressible oracle (rationale in the doc;
 each has an exact oracled twin or a pytest oracle). The `bench`
@@ -38,7 +45,8 @@ def first_sentence(doc: str) -> str:
     return text[:160] + ("…" if len(text) > 160 else "")
 
 
-def main() -> None:
+def render() -> str:
+    """REGISTRY.md's text for the registry as imported."""
     lines = [HEADER]
     lines.append("| # | query | verification | bench | tags | doc |")
     lines.append("|---|---|---|---|---|---|")
@@ -48,13 +56,13 @@ def main() -> None:
         tags = ", ".join(getattr(spec, "tags", ()) or ())
         doc = first_sentence(getattr(spec, "doc", "") or "").replace("|", "\\|")
         lines.append(f"| {i} | `{name}` | {ver} | {bench} | {tags} | {doc} |")
-    out = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "REGISTRY.md",
-    )
-    with open(out, "w") as f:
-        f.write("\n".join(lines) + "\n")
-    print(f"wrote {out}: {len(REGISTRY)} queries")
+    return "\n".join(lines) + "\n"
+
+
+def main() -> None:
+    with open(OUT, "w") as f:
+        f.write(render())
+    print(f"wrote {OUT}: {len(REGISTRY)} queries")
 
 
 if __name__ == "__main__":
