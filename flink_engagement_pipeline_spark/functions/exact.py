@@ -28,19 +28,3 @@ def dec(col: Column | str, typ: str = MONEY) -> Column:
     """Exact decimal view of a 2-decimal double column."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast(typ)
-
-
-def sum_money(col: Column | str, alias: str) -> Column:
-    """Order-independent SUM of a 2-decimal double, emitted as DOUBLE.
-
-    Oracle-side equivalent: ``CAST(SUM(CAST(x AS DECIMAL(18,2))) AS
-    DOUBLE)``.
-    """
-    return F.sum(dec(col)).cast("double").alias(alias)
-
-
-def avg_money(col: Column | str, alias: str) -> Column:
-    """AVG as explicit SUM/COUNT so both engines compute the identical
-    double expression: ``CAST(SUM(dec) AS DOUBLE) / COUNT(x)``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return (F.sum(dec(c)).cast("double") / F.count(c)).alias(alias)

@@ -690,8 +690,9 @@ def video_frame_phash_sigs(
     pipeline's full re-shingle + re-md5 of the whole payload per
     frame (~4.6 frames/video: the dominant stage of the video family,
     measured 6.9 s of media_video_neardup's 10.8 s at sf0.1 — see
-    tools/video_profile.py). The per-frame threshold/pack then needs
-    no frame-volume window either: the frame total is
+    OPTIMIZATION_r14.md; the profiler is ``git show
+    0dbd1ad:tools/video_profile.py``). The per-frame threshold/pack
+    then needs no frame-volume window either: the frame total is
     ``prefix_total + tail_lum`` by construction, so packing is one
     equi-join fan-out (video cells x frames, doc_id-keyed) plus one
     aggregation riding the same partitioning.

@@ -109,10 +109,6 @@ class Pattern:
         return specs
 
 
-def _ts_cols(pattern: Pattern) -> list[str]:
-    return [f"{s.name}_ts" for s in pattern.steps]
-
-
 def match_pattern(
     events: DataFrame,
     pattern: Pattern,

@@ -27,7 +27,8 @@ from .registry import register
 
 # sign-aware integer-cent quantization of `value`: exact in both
 # engines, summable in any order. The NULL->0 form for measures that
-# must never be null; the NULL-preserving form for profiling.
+# must never be null (its Column twin is queries_ext3's `_cents`,
+# imported below); the NULL-preserving form for profiling.
 _CENTS_SQL = """
 CASE WHEN value IS NULL THEN 0
      WHEN value >= 0 THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
@@ -39,14 +40,6 @@ CASE WHEN value IS NULL THEN NULL
      WHEN value >= 0 THEN CAST(floor(value * 100 + 0.5) AS BIGINT)
      ELSE -CAST(floor(-value * 100 + 0.5) AS BIGINT) END
 """
-
-
-def _cents(col: F.Column) -> F.Column:
-    return (
-        F.when(col.isNull(), F.lit(0).cast("long"))
-        .when(col >= 0, F.floor(col * 100 + F.lit(0.5)).cast("long"))
-        .otherwise(-F.floor(-col * 100 + F.lit(0.5)).cast("long"))
-    )
 
 
 def _cents_null(col: F.Column) -> F.Column:
@@ -375,8 +368,10 @@ def q_cdc_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # identical constants to queries_ext3's portable HLL — the overlap
 # query must estimate with the exact same sketch so the two queries
-# cross-check each other.
-from .queries_ext3 import _HLL_EST, _HLL_M, _HLL_SCALE  # noqa: E402
+# cross-check each other. Importing queries_ext3 registers its queries,
+# so this import stays here: queries_stream imports this module first,
+# and registration order is part of the driver contract.
+from .queries_ext3 import _HLL_EST, _HLL_M, _HLL_SCALE, _cents  # noqa: E402
 
 
 @register(

@@ -1158,7 +1158,8 @@ GROUP BY 1
         "idempotent), and the decimal routing makes both phases exact "
         "and associative — the oracle is the plain one-phase SQL "
         "aggregation, hash-matched. Scope honestly measured "
-        "(tools/skew_probe.py, 10M rows, 50%-hot key): for ALGEBRAIC "
+        "(BASELINE.md 'Round-6 skew probe', 10M rows, 50%-hot key; "
+        "`git show 0dbd1ad:tools/skew_probe.py`): for ALGEBRAIC "
         "aggregates like this SUM/COUNT, map-side partial aggregation "
         "already collapses the hot key to one row per map task, so "
         "naive beats salted (0.67 vs 0.91 s) — salting's real domain "

@@ -363,17 +363,6 @@ class ParquetSink:
         pass
 
 
-class ConsoleSink:
-    def __init__(self, num_rows: int = 5) -> None:
-        self.num_rows = num_rows
-
-    def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        df.show(self.num_rows, truncate=False)
-
-    def close(self) -> None:  # pragma: no cover
-        pass
-
-
 # --------------------------------------------------------------------------
 # K1: upsert-Kafka-shaped payload
 # --------------------------------------------------------------------------
