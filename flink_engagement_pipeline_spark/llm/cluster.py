@@ -309,6 +309,18 @@ def train_kmeans(
 SEMDEDUP_MAX_CANDIDATE_PAIRS = 50_000_000
 
 
+def _normed(df: DataFrame) -> DataFrame:
+    """(vec_id, cluster, v, nrm): each vector's norm computed once per
+    row, before any quadratic pair stage (the norm-once lesson in
+    semantic_dedup)."""
+    return df.select(
+        "vec_id",
+        "cluster",
+        "v",
+        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
+    )
+
+
 def semantic_dedup(
     emb: DataFrame,
     k: int = 8,
@@ -370,12 +382,7 @@ def semantic_dedup(
     # split (guide §2.5/§2.6; measured: the screen ran as a single
     # task). No-op on real multi-split inputs.
     sided = fan_out(
-        assign_clusters(e, cents, impl=impl).select(
-            "vec_id",
-            "cluster",
-            "v",
-            F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
-        )
+        _normed(assign_clusters(e, cents, impl=impl))
     ).localCheckpoint(eager=False)
     sizes = {
         r["cluster"]: r["n"]
@@ -479,6 +486,86 @@ FROM asg a LEFT JOIN drops d USING (vec_id)
     )
 
 
+def _batch_vs_state(
+    caller: str,
+    new_emb: DataFrame,
+    corpus_index: DataFrame,
+    corpus_emb: DataFrame,
+    cents: list[list[float]],
+    max_candidate_pairs: int,
+) -> tuple[DataFrame, int, int, DataFrame]:
+    """Shared setup of the two SemDeDup batch screens
+    (semantic_dedup_ingest, streaming_semdedup_pairs): the batch's
+    (vec_id, cluster, v) assignment under the pinned centroids, the
+    batch row count, the estimated batch-vs-state pair count
+    (refused loudly above ``max_candidate_pairs``, naming the
+    most-loaded clusters), and the corpus state slice (vec_id,
+    cluster, v) pruned to the batch's touched clusters at the index
+    scan by a LITERAL isin on that metadata-sized cluster list, so
+    the predicate pushes into a persisted-index scan; corpus vectors
+    ride one id-keyed join against that slice."""
+    # r14: the batch assignment is referenced several times downstream
+    # (budget guard, screen side(s), keep/drop or union state) —
+    # checkpoint once, materialized by the guard's collect (the
+    # semantic_dedup device; batch-sized blocks). NO fan_out here,
+    # unlike semantic_dedup's corpus-side screen: the screen is
+    # batch-sized, and the r15 interleaved bench measured the
+    # repartition as pure overhead at that size (1.81 -> 2.33 s) —
+    # while on a real multi-split daily batch the fan_out guard is a
+    # no-op anyway, so the device could only ever fire where it hurts.
+    # A replay micro-batch is smaller still, and its committed state
+    # must stay byte-identical.
+    b_asg = assign_clusters(
+        new_emb.select(
+            "vec_id", F.col("embedding").cast("array<double>").alias("v")
+        ),
+        cents,
+    ).localCheckpoint(eager=False)
+    b_sizes = {
+        r["cluster"]: r["n"]
+        for r in b_asg.groupBy("cluster")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    touched = sorted(b_sizes)
+    c_sizes = {
+        r["cluster"]: r["n"]
+        for r in corpus_index.filter(F.col("cluster").isin(touched))
+        .groupBy("cluster")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    }
+    est_pairs = sum(
+        nb * (nb - 1) // 2 + nb * c_sizes.get(cl, 0)
+        for cl, nb in b_sizes.items()
+    )
+    if est_pairs > max_candidate_pairs:
+        biggest = sorted(
+            b_sizes.items(),
+            key=lambda kv: -(kv[1] + c_sizes.get(kv[0], 0)),
+        )[:3]
+        raise ValueError(
+            f"{caller} would screen ~{est_pairs} "
+            f"batch-vs-state pairs (> max_candidate_pairs="
+            f"{max_candidate_pairs}); most-loaded batch clusters "
+            f"{biggest}. Raise k at (re)build time so clusters "
+            f"shrink, or raise max_candidate_pairs for a deliberate "
+            f"run"
+        )
+    c_state = (
+        corpus_index.filter(F.col("cluster").isin(touched))
+        .join(
+            corpus_emb.select(
+                "vec_id",
+                F.col("embedding").cast("array<double>").alias("v"),
+            ),
+            "vec_id",
+        )
+        .select("vec_id", "cluster", "v")
+    )
+    return b_asg, sum(b_sizes.values()), est_pairs, c_state
+
+
 def semantic_dedup_ingest(
     new_emb: DataFrame,
     corpus_index: DataFrame,
@@ -486,7 +573,6 @@ def semantic_dedup_ingest(
     cents: list[list[float]],
     threshold: float = 0.35,
     max_candidate_pairs: int = SEMDEDUP_MAX_CANDIDATE_PAIRS,
-    impl: str = "catalyst",
 ) -> DataFrame:
     """Incremental semantic-dedup ingest — the daily-batch shape for
     SemDeDup (r10 verdict ask #1: the one dedup family without an
@@ -517,92 +603,21 @@ def semantic_dedup_ingest(
     centroids — the rebuild-equivalence property pinned in pytest.
 
     Scale shape: candidate space is sum_c(nb_c^2/2 + nb_c*ncorp_c)
-    over TOUCHED clusters only, never corpus^2 — the corpus side is
-    pruned to the batch's cluster set with a LITERAL isin on the
-    metadata-sized touched-cluster list (collected for the pair-budget
-    guard anyway), so the predicate pushes into the persisted-index
-    scan; corpus vectors ride one id-keyed join against that pruned
-    index slice. The pair-budget guard extends to the ingest cross
-    terms, and the keep/drop join carries the _BROADCAST_ID_LIMIT
-    degrade. Returns (vec_id, cluster, is_kept) for every BATCH row."""
-    # r14: the batch assignment is referenced several times downstream
-    # (budget guard, screen side(s), keep/drop or union state) —
-    # checkpoint once, materialized by the guard's collect (the
-    # semantic_dedup device; batch-sized blocks). NO fan_out here,
-    # unlike semantic_dedup's corpus-side screen: the ingest screen is
-    # batch-sized, and the r15 interleaved bench measured the
-    # repartition as pure overhead at that size (1.81 -> 2.33 s) —
-    # while on a real multi-split daily batch the fan_out guard is a
-    # no-op anyway, so the device could only ever fire where it hurts.
-    b_asg = assign_clusters(
-        new_emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        ),
+    over TOUCHED clusters only, never corpus^2 — the corpus state
+    slice and the pair-budget guard over those cross terms come from
+    _batch_vs_state, and the keep/drop join carries the
+    _BROADCAST_ID_LIMIT degrade. Returns (vec_id, cluster, is_kept)
+    for every BATCH row."""
+    b_asg, n_batch, est_pairs, c_state = _batch_vs_state(
+        "semantic_dedup_ingest",
+        new_emb,
+        corpus_index,
+        corpus_emb,
         cents,
-        impl=impl,
-    ).localCheckpoint(eager=False)
-    b_sizes = {
-        r["cluster"]: r["n"]
-        for r in b_asg.groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    touched = sorted(b_sizes)
-    c_sizes = {
-        r["cluster"]: r["n"]
-        for r in corpus_index.filter(F.col("cluster").isin(touched))
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    est_pairs = sum(
-        nb * (nb - 1) // 2 + nb * c_sizes.get(cl, 0)
-        for cl, nb in b_sizes.items()
+        max_candidate_pairs,
     )
-    if est_pairs > max_candidate_pairs:
-        biggest = sorted(
-            b_sizes.items(),
-            key=lambda kv: -(kv[1] + c_sizes.get(kv[0], 0)),
-        )[:3]
-        raise ValueError(
-            f"semantic_dedup_ingest would screen ~{est_pairs} "
-            f"batch-vs-state pairs (> max_candidate_pairs="
-            f"{max_candidate_pairs}); most-loaded batch clusters "
-            f"{biggest}. Raise k at (re)build time so clusters "
-            f"shrink, or raise max_candidate_pairs for a deliberate "
-            f"run"
-        )
-    # corpus state pruned to touched clusters at the INDEX scan, then
-    # vectors id-keyed through that slice; norms computed once per
-    # side before the quadratic stage (the norm-once lesson)
-    c_state = (
-        corpus_index.filter(F.col("cluster").isin(touched))
-        .join(
-            corpus_emb.select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("v"),
-            ),
-            "vec_id",
-        )
-        .select("vec_id", "cluster", "v")
-    )
-    sided_b = b_asg.select(
-        "vec_id",
-        "cluster",
-        "v",
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
-    )
-    state = (
-        b_asg.select("vec_id", "cluster", "v")
-        .unionByName(c_state)
-        .select(
-            "vec_id",
-            "cluster",
-            "v",
-            F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
-        )
-    )
-    a, b = sided_b.alias("a"), state.alias("b")
+    state = _normed(b_asg.select("vec_id", "cluster", "v").unionByName(c_state))
+    a, b = _normed(b_asg).alias("a"), state.alias("b")
     cos = _dot(F.col("a.v"), F.col("b.v")) / (
         F.col("a.nrm") * F.col("b.nrm")
     )
@@ -619,7 +634,7 @@ def semantic_dedup_ingest(
     )
     from .dedup import _BROADCAST_ID_LIMIT
 
-    n_drop_upper = min(est_pairs, sum(b_sizes.values()))
+    n_drop_upper = min(est_pairs, n_batch)
     drop_side = (
         F.broadcast(dropped) if n_drop_upper <= _BROADCAST_ID_LIMIT else dropped
     )
@@ -687,12 +702,7 @@ def _within_cluster_drops(members: DataFrame, threshold: float) -> DataFrame:
     ids that have a lower-id same-cluster neighbour at
     cosine >= threshold — norm-once form (the measured 3x win), the
     identical float ops and order as semantic_dedup's inline screen."""
-    sided = members.select(
-        "vec_id",
-        "cluster",
-        "v",
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
-    )
+    sided = _normed(members)
     a, b = sided.alias("a"), sided.alias("b")
     cos = _dot(F.col("a.v"), F.col("b.v")) / (
         F.col("a.nrm") * F.col("b.nrm")
@@ -717,7 +727,6 @@ def semantic_dedup_delete(
     iters: int = 3,
     threshold: float = 0.35,
     max_candidate_pairs: int = SEMDEDUP_MAX_CANDIDATE_PAIRS,
-    impl: str = "catalyst",
     prior: DataFrame | None = None,
     index: DataFrame | None = None,
 ) -> DataFrame:
@@ -764,8 +773,8 @@ def semantic_dedup_delete(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     if index is None:
-        cents = train_kmeans(emb, k, iters, impl=impl)  # pinned
-        index = assign_clusters(e, cents, impl=impl).select(
+        cents = train_kmeans(emb, k, iters)  # pinned
+        index = assign_clusters(e, cents).select(
             "vec_id", "cluster"
         )
     dset = del_ids.select("vec_id").distinct()
@@ -788,7 +797,6 @@ def semantic_dedup_delete(
             iters,
             threshold,
             max_candidate_pairs=max_candidate_pairs,
-            impl=impl,
         )
     untouched = prior.filter(~F.col("cluster").isin(touched))
     re_members = remaining.filter(F.col("cluster").isin(touched))
@@ -843,7 +851,6 @@ def streaming_semdedup_pairs(
     cents: list[list[float]],
     threshold: float = 0.35,
     max_candidate_pairs: int = SEMDEDUP_MAX_CANDIDATE_PAIRS,
-    impl: str = "catalyst",
 ) -> DataFrame:
     """One micro-batch of STREAMING semantic-dedup maintenance,
     ARRIVAL-ORDER AGNOSTIC — the semantic instance of the relaxation
@@ -868,69 +875,15 @@ def streaming_semdedup_pairs(
     guard metadata), corpus vectors read id-keyed through that slice
     for the verify only, pair budget guarded, batch-sized work plus
     per-touched-cluster state reads."""
-    # r14: the batch assignment is referenced several times downstream
-    # (budget guard, screen side(s), keep/drop or union state) —
-    # checkpoint once, materialized by the guard's collect (the
-    # semantic_dedup device; batch-sized blocks). Unlike the batch
-    # ingest, NO fan_out here: a micro-batch is replay-sized (a
-    # repartition would be pure per-batch shuffle overhead), and the
-    # committed replay state must stay byte-identical to r14's.
-    b_asg = assign_clusters(
-        new_emb.select(
-            "vec_id", F.col("embedding").cast("array<double>").alias("v")
-        ),
+    b_asg, _, _, c_state = _batch_vs_state(
+        "streaming_semdedup_pairs",
+        new_emb,
+        corpus_index,
+        corpus_emb,
         cents,
-        impl=impl,
-    ).localCheckpoint(eager=False)
-    b_sizes = {
-        r["cluster"]: r["n"]
-        for r in b_asg.groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    touched = sorted(b_sizes)
-    c_sizes = {
-        r["cluster"]: r["n"]
-        for r in corpus_index.filter(F.col("cluster").isin(touched))
-        .groupBy("cluster")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    }
-    est_pairs = sum(
-        nb * (nb - 1) // 2 + nb * c_sizes.get(cl, 0)
-        for cl, nb in b_sizes.items()
+        max_candidate_pairs,
     )
-    if est_pairs > max_candidate_pairs:
-        biggest = sorted(
-            b_sizes.items(),
-            key=lambda kv: -(kv[1] + c_sizes.get(kv[0], 0)),
-        )[:3]
-        raise ValueError(
-            f"streaming_semdedup_pairs would screen ~{est_pairs} "
-            f"batch-vs-state pairs (> max_candidate_pairs="
-            f"{max_candidate_pairs}); most-loaded clusters {biggest}"
-        )
-    c_state = (
-        corpus_index.filter(F.col("cluster").isin(touched))
-        .join(
-            corpus_emb.select(
-                "vec_id",
-                F.col("embedding").cast("array<double>").alias("v"),
-            ),
-            "vec_id",
-        )
-        .select("vec_id", "cluster", "v")
-    )
-
-    def _sided(df: DataFrame) -> DataFrame:
-        return df.select(
-            "vec_id",
-            "cluster",
-            "v",
-            F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm"),
-        )
-
-    sb, sc = _sided(b_asg), _sided(c_state)
+    sb, sc = _normed(b_asg), _normed(c_state)
     cos = _dot(F.col("a.v"), F.col("b.v")) / (
         F.col("a.nrm") * F.col("b.nrm")
     )

@@ -1187,71 +1187,6 @@ def minhash_bands(
     )
 
 
-def incremental_portable_ingest(
-    new_docs: DataFrame,
-    corpus_bands: DataFrame,
-    corpus_docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """`incremental_minhash_dedup` rebuilt on the PORTABLE MinHash so
-    the whole ingest screen — index join, candidate generation, exact
-    verification — carries a hash-matching SQL oracle.
-
-    Same production contract: `corpus_bands` is the persisted band
-    index (`portable_band_index`, appended per batch), candidate
-    generation never re-reads corpus text, and exact Jaccard runs on
-    candidates only. Assumes an append-only id space (ingest ids are
-    larger than corpus ids), so `dup_of < doc_id` covers both
-    corpus matches and in-batch ordering — the scheduled-daily-batch
-    contract; for arrival-order-agnostic ingestion use
-    :func:`streaming_portable_ingest_pairs`, which relaxes exactly
-    this clause. Returns (doc_id, dup_of, jaccard) for every
-    >= threshold match.
-    """
-    base_new = portable_base(new_docs, n)
-    new_bands = portable_band_index(base_new)
-    all_bands = corpus_bands.unionByName(new_bands)
-    cand = (
-        new_bands.alias("a")
-        .join(
-            all_bands.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") > F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id"), F.col("b.doc_id").alias("dup_of")
-        )
-        .distinct()
-    )
-    sh_all = base_new.unionByName(portable_base(corpus_docs, n))
-    # candidates materialized once, corpus-side verify read
-    # semi-pruned to the exact dup_of id set (see the xxhash64
-    # ingest above and portable_minhash_pairs for the measured
-    # rationale) — the id-keyed candidates-only corpus read the
-    # ingest contract states
-    cand = cand.localCheckpoint()
-    a = base_new.select(F.col("doc_id"), F.col("sh").alias("sh_a"))
-    b = _semi_prune(
-        sh_all,
-        cand.select(F.col("dup_of").alias("doc_id")).distinct(),
-        n_ids=cand.count(),
-    ).select(F.col("doc_id").alias("dup_of"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(a, "doc_id")
-        .join(b, "dup_of")
-        .select(
-            "doc_id",
-            "dup_of",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def streaming_portable_ingest_pairs(
     new_docs: DataFrame,
     corpus_bands: DataFrame,
@@ -1259,17 +1194,15 @@ def streaming_portable_ingest_pairs(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """One micro-batch of STREAMING dedup-index maintenance: screen a
-    batch against the persisted band index (plus itself) and return
-    verified pairs normalized to (doc_a < doc_b), ARRIVAL-ORDER
-    AGNOSTIC.
+    """The portable-MinHash ingest screen, one code path for the daily
+    batch (`docs_minhash_ingest`) and each streaming micro-batch
+    (`stream_minhash_index_replay`): screen a batch against the
+    persisted band index (plus itself) and return verified pairs
+    normalized to (doc_a < doc_b), ARRIVAL-ORDER AGNOSTIC.
 
-    Differs from `incremental_portable_ingest` in exactly one
-    contract clause: that function assumes an append-only id space
-    (ingest ids larger than corpus ids) and keys candidates on
-    `new.doc_id > other.doc_id`, which silently LOSES the pair when a
-    stream delivers a smaller id after a larger one (no stream
-    guarantees id-ordered arrival). Here the cross-batch candidate
+    No stream guarantees id-ordered arrival, so candidates are never
+    keyed on `new.doc_id > other.doc_id` (that loses the pair when a
+    smaller id arrives after a larger one). The cross-batch candidate
     join accepts either id order (the pair is formed exactly once —
     in the batch where the LATER-ARRIVING member is new, since the
     earlier member exists only in the index side), in-batch pairs
@@ -1279,11 +1212,13 @@ def streaming_portable_ingest_pairs(
     per-batch outputs equals `portable_minhash_pairs` of the whole
     corpus — signature, banding, candidate, and verify math are
     shared, so the equality is exact (hash-matched against the
-    full-rebuild oracle by `stream_minhash_index_replay`).
+    full-rebuild oracle by `stream_minhash_index_replay`). When every
+    batch id exceeds every corpus id (the batch query's split),
+    doc_b is the batch member of each pair.
 
-    Same 100 TB shape as the batch ingest: the index is the only
-    corpus-side input to candidate generation; corpus TEXT is read
-    id-keyed for verification candidates only (semi-pruned scan)."""
+    100 TB shape: the index is the only corpus-side input to
+    candidate generation; corpus TEXT is read id-keyed for
+    verification candidates only (semi-pruned scan)."""
     base_new = portable_base(new_docs, n)
     new_bands = portable_band_index(base_new)
     def _norm(pairs: DataFrame) -> DataFrame:
@@ -1447,23 +1382,25 @@ def simhash_near_pairs(
     MinHash/hyperplane paths: equi-join on (rotation, bucket), exact
     verify, never all-pairs.
     """
-    return simhash_pairs_from_index(
-        simhash_buckets(docs, rotations), max_hamming
+    return hamming_pairs_from_index(
+        simhash_buckets(docs, rotations), "simhash", max_hamming
     )
 
 
-def simhash_pairs_from_index(
-    index: DataFrame, max_hamming: int = 8
+def hamming_pairs_from_index(
+    index: DataFrame, hash_col: str, max_hamming: int
 ) -> DataFrame:
-    """The factored SERVING tail of the SimHash pair pipeline: pairs
-    from a (doc_id, simhash, rot, bucket) bucket index alone — the
-    identical join+verify `simhash_near_pairs` runs, taken as a
-    separate entry point so index LIFECYCLE operations (takedown
-    anti-join, compaction) feed the same one code path they serve.
-    Unlike the MinHash tail (`portable_pairs_from_index`), Hamming
-    verification reads the signatures already in the index, so no
-    corpus text is touched at any stage — a deleted doc can neither
-    produce candidates nor be verified against."""
+    """The factored SERVING tail of the two Hamming index families
+    (SimHash over text, `simhash_buckets`; pHash over media,
+    `llm/multimodal.py:media_phash_buckets`): pairs from a (doc_id,
+    <hash_col>, rot, bucket) bucket index alone — the join+verify the
+    full builds run, taken as a separate entry point so index
+    LIFECYCLE operations (takedown anti-join, compaction) feed the
+    same one code path they serve. Unlike the MinHash tail
+    (`portable_pairs_from_index`), Hamming verification reads the
+    hashes already in the index, so no corpus payload is touched at
+    any stage — a deleted doc can neither produce candidates nor be
+    verified against."""
     a, b = index.alias("a"), index.alias("b")
     return (
         a.join(
@@ -1476,7 +1413,7 @@ def simhash_pairs_from_index(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),
             F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+                F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
             ).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
@@ -1485,32 +1422,34 @@ def simhash_pairs_from_index(
     )
 
 
-def streaming_simhash_ingest_pairs(
-    new_docs: DataFrame,
+def streaming_hamming_ingest_pairs(
+    new_idx: DataFrame,
     corpus_index: DataFrame,
-    max_hamming: int = 8,
-    rotations: int = 5,
+    hash_col: str,
+    max_hamming: int,
 ) -> DataFrame:
-    """One micro-batch of STREAMING SimHash index maintenance:
-    screen a batch against the persisted bucket index (plus itself)
-    and return verified pairs normalized to (doc_a < doc_b),
-    ARRIVAL-ORDER AGNOSTIC — the SimHash counterpart of
-    `streaming_portable_ingest_pairs`, relaxing
-    `incremental_simhash_ingest`'s append-only-id contract the same
-    way: the cross join accepts either id order (a pair forms exactly
-    once, in the batch whose member arrived later — the earlier one
-    exists only on the index side), in-batch pairs come from a
-    strict-order self-join, output is (least, greatest).
+    """The ingest screen of the two Hamming index families, one code
+    path for the daily batch (`docs_simhash_ingest`,
+    `media_phash_ingest`) and each streaming micro-batch
+    (`stream_simhash_index_replay`, `stream_media_phash_index_replay`):
+    screen a batch's bucket index ``new_idx`` against the persisted
+    ``corpus_index`` (plus itself) and return verified pairs
+    normalized to (doc_a < doc_b), ARRIVAL-ORDER AGNOSTIC — the
+    Hamming counterpart of `streaming_portable_ingest_pairs`: the
+    cross join accepts either id order (a pair forms exactly once, in
+    the batch whose member arrived later — the earlier one exists only
+    on the index side), in-batch pairs come from a strict-order
+    self-join, output is (least, greatest). When every batch id
+    exceeds every corpus id, doc_b is the batch member of each pair.
 
-    Cheaper than the MinHash streaming path at any corpus size:
-    Hamming verification reads the signatures already ON the joined
-    index rows, so no corpus-side data beyond the 4-column index is
-    touched — there is no verify scan to semi-prune at all.
-    Accumulated over disjoint batches covering a corpus, the union of
-    per-batch outputs equals `simhash_near_pairs` of the whole corpus
-    (hash-matched against the full-rebuild oracle by
-    `stream_simhash_index_replay`)."""
-    new_idx = simhash_buckets(new_docs, rotations)
+    Cheaper than the MinHash screen at any corpus size: Hamming
+    verification reads the hashes carried ON the joined index rows,
+    so no corpus-side data beyond the 4-column index is touched —
+    there is no verify scan to semi-prune at all. Accumulated over
+    disjoint batches covering a corpus, the union of per-batch
+    outputs equals `hamming_pairs_from_index` of the whole corpus's
+    index (hash-matched against the full-rebuild oracles by the two
+    replays)."""
 
     def _pairs(a: DataFrame, b: DataFrame, cond) -> DataFrame:
         j = a.alias("a").join(
@@ -1523,7 +1462,7 @@ def streaming_simhash_ingest_pairs(
             F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
             F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
             F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
+                F.col(f"a.{hash_col}").bitwiseXOR(F.col(f"b.{hash_col}"))
             ).alias("hamming"),
         )
 
@@ -1589,55 +1528,6 @@ JOIN bucketed b
 WHERE bit_count(xor(a.simhash, b.simhash)) <= {max_hamming}
 GROUP BY 1, 2
 """
-
-
-def incremental_simhash_ingest(
-    new_docs: DataFrame,
-    corpus_index: DataFrame,
-    max_hamming: int = 8,
-    rotations: int = 5,
-) -> DataFrame:
-    """Incremental SimHash ingest: screen a NEW batch of documents
-    against a persisted corpus bucket index (`simhash_buckets`,
-    appended per batch) — the daily-batch shape the MinHash family
-    already has (`incremental_minhash_dedup`), completed for SimHash
-    per the round-5 verdict.
-
-    Strictly cheaper than the MinHash ingest at corpus scale: the
-    index rows carry the 60-bit signatures, and Hamming verification
-    is ``bit_count(xor)`` on those very rows — so corpus TEXT is
-    never read, not even for verification. The only corpus-side
-    input at any corpus size is the (doc_id, simhash, rot, bucket)
-    index, and the only join is the bounded-key (rot, bucket)
-    equi-join. Assumes an append-only id space (ingest ids larger
-    than corpus ids), so ``dup_of < doc_id`` covers both corpus
-    matches and in-batch ordering — the scheduled-daily-batch
-    contract; for arrival-order-agnostic ingestion use
-    :func:`streaming_simhash_ingest_pairs`, which relaxes exactly
-    this clause. Returns (doc_id, dup_of, hamming) for every
-    <= max_hamming match of a new doc against corpus + batch.
-    """
-    new_idx = simhash_buckets(new_docs, rotations)
-    all_idx = corpus_index.unionByName(new_idx)
-    return (
-        new_idx.alias("a")
-        .join(
-            all_idx.alias("b"),
-            (F.col("a.rot") == F.col("b.rot"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") > F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("b.doc_id").alias("dup_of"),
-            F.bit_count(
-                F.col("a.simhash").bitwiseXOR(F.col("b.simhash"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .groupBy("doc_id", "dup_of")
-        .agg(F.first("hamming").alias("hamming"))
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import hamming_pairs_from_index
+
 MEDIA_SCHEMA = "doc_id bigint, kind string, payload binary"
 FEATURES_SCHEMA = "doc_id bigint, n_bytes bigint, payload_md5 string"
 DECODED_SCHEMA = (
@@ -407,133 +409,12 @@ def media_phash_pairs(
     SparkContext stop. They are not a reliable store: an executor loss
     loses them, and a job that still reads them fails with
     "Checkpoint block ... not found" instead of recomputing."""
-    return media_phash_pairs_from_index(
+    return hamming_pairs_from_index(
         media_phash_buckets(media, rotations).localCheckpoint(
             eager=False
         ),
+        "phash",
         max_hamming,
-    )
-
-
-def media_phash_pairs_from_index(
-    index: DataFrame, max_hamming: int = PHASH_MAX_HAMMING
-) -> DataFrame:
-    """The factored SERVING tail of the media pHash pipeline: pairs
-    from a (doc_id, phash, rot, bucket) index alone — the lifecycle
-    entry point (takedown anti-join, compaction) serving the same one
-    code path as the full build, and like the SimHash tail it never
-    touches payloads: Hamming verification reads the hashes in the
-    index."""
-    a, b = index.alias("a"), index.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.rot") == F.col("b.rot"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.bit_count(
-                F.col("a.phash").bitwiseXOR(F.col("b.phash"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .groupBy("doc_a", "doc_b")
-        .agg(F.first("hamming").alias("hamming"))
-    )
-
-
-def incremental_media_phash_ingest(
-    new_media: DataFrame,
-    corpus_index: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    rotations: int = PHASH_ROTATIONS,
-) -> DataFrame:
-    """Incremental media-pHash ingest: screen a NEW batch of blobs
-    against a persisted corpus bucket index — the daily-batch shape
-    every other index family already has (MinHash, SimHash,
-    hyperplane, IVF), completed for the media axis. Hashing cost is
-    batch-sized; the only corpus-side input at any corpus size is the
-    4-column index, and verification is bit_count(xor) on index rows
-    (corpus payloads are never read, same property as SimHash
-    ingest). Assumes an append-only id space (ingest ids larger than
-    corpus ids), so ``dup_of < doc_id`` covers corpus matches and
-    in-batch ordering — the scheduled-daily-batch contract; for
-    arrival-order-agnostic ingestion (a stream may deliver a smaller
-    id after its larger partner) use
-    :func:`streaming_media_phash_ingest_pairs`, which relaxes exactly
-    this clause. Returns (doc_id, dup_of, hamming)."""
-    new_idx = media_phash_buckets(new_media, rotations)
-    all_idx = corpus_index.unionByName(new_idx)
-    return (
-        new_idx.alias("a")
-        .join(
-            all_idx.alias("b"),
-            (F.col("a.rot") == F.col("b.rot"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.doc_id") > F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id"),
-            F.col("b.doc_id").alias("dup_of"),
-            F.bit_count(
-                F.col("a.phash").bitwiseXOR(F.col("b.phash"))
-            ).alias("hamming"),
-        )
-        .filter(F.col("hamming") <= max_hamming)
-        .groupBy("doc_id", "dup_of")
-        .agg(F.first("hamming").alias("hamming"))
-    )
-
-
-def streaming_media_phash_ingest_pairs(
-    new_media: DataFrame,
-    corpus_index: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    rotations: int = PHASH_ROTATIONS,
-) -> DataFrame:
-    """One micro-batch of STREAMING media-pHash index maintenance,
-    ARRIVAL-ORDER AGNOSTIC — the media instance of the relaxation
-    `streaming_simhash_ingest_pairs` makes for text: the cross join
-    against the persisted index accepts either id order (each pair
-    forms exactly once, in the batch whose member arrived later),
-    in-batch pairs come from a strict-order self-join, output is
-    normalized (doc_a < doc_b, hamming). Like SimHash, verification
-    reads the hashes carried BY the joined index rows, so a batch
-    touches no corpus payloads at all. Accumulated over disjoint
-    batches covering a corpus, the union of per-batch outputs equals
-    `media_phash_pairs` of the whole corpus."""
-    new_idx = media_phash_buckets(new_media, rotations)
-
-    def _pairs(a: DataFrame, b: DataFrame, cond) -> DataFrame:
-        j = a.alias("a").join(
-            b.alias("b"),
-            (F.col("a.rot") == F.col("b.rot"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & cond,
-        )
-        return j.select(
-            F.least(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_a"),
-            F.greatest(F.col("a.doc_id"), F.col("b.doc_id")).alias("doc_b"),
-            F.bit_count(
-                F.col("a.phash").bitwiseXOR(F.col("b.phash"))
-            ).alias("hamming"),
-        )
-
-    cross = _pairs(
-        new_idx, corpus_index, F.col("a.doc_id") != F.col("b.doc_id")
-    )
-    in_batch = _pairs(
-        new_idx, new_idx, F.col("a.doc_id") > F.col("b.doc_id")
-    )
-    return (
-        cross.unionByName(in_batch)
-        .filter(F.col("hamming") <= max_hamming)
-        .groupBy("doc_a", "doc_b")
-        # per-pair hamming is rotation-invariant, so FIRST == MIN
-        .agg(F.first("hamming").alias("hamming"))
     )
 
 
@@ -924,41 +805,14 @@ def _video_nframes(index: DataFrame) -> DataFrame:
     )
 
 
-def _video_pairs(
-    a_idx: DataFrame,
-    b_idx: DataFrame,
-    nframes: DataFrame,
-    max_hamming: int,
-    min_frac: float,
+def _video_scored(
+    frame_pairs: DataFrame, nframes: DataFrame, min_frac: float
 ) -> DataFrame:
-    """Shared pair/score stage of the video family: frame-level
-    rotation-bucket candidates (a.video < b.video), Hamming verify on
-    the hashes in the index, matched-frame-fraction aggregation.
-    ``b_idx`` restricts the larger-id side (the full index for a
-    build/serve, the batch's own index for an ingest screen)."""
-    a, b = a_idx.alias("a"), b_idx.alias("b")
-    fp = (
-        a.join(
-            b,
-            (F.col("a.rot") == F.col("b.rot"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (
-                F.expr(f"a.doc_id div {_FRAME_KEY}")
-                < F.expr(f"b.doc_id div {_FRAME_KEY}")
-            ),
-        )
-        .filter(
-            F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
-            <= max_hamming
-        )
-        .select(
-            F.expr(f"a.doc_id div {_FRAME_KEY}").alias("doc_a"),
-            (F.col("a.doc_id") % _FRAME_KEY).alias("frame_a"),
-            F.expr(f"b.doc_id div {_FRAME_KEY}").alias("doc_b"),
-            (F.col("b.doc_id") % _FRAME_KEY).alias("frame_b"),
-        )
-    )
-    agg = fp.groupBy("doc_a", "doc_b").agg(
+    """Shared score stage of the video family: verified frame pairs
+    (doc_a, frame_a, doc_b, frame_b) with doc_a < doc_b in, scored
+    video pairs out — matched-frame fraction over both sides' sampled
+    frame counts from ``nframes`` (see _video_nframes)."""
+    agg = frame_pairs.groupBy("doc_a", "doc_b").agg(
         F.countDistinct("frame_a").alias("matched_a"),
         F.countDistinct("frame_b").alias("matched_b"),
     )
@@ -996,42 +850,35 @@ def media_video_pairs_from_index(
 ) -> DataFrame:
     """The factored SERVING tail of the video near-dup pipeline:
     scored video pairs from the persisted frame-level (fkey, phash,
-    rot, bucket) index ALONE — frame counts derive from the index's
-    distinct fkeys (see _video_nframes), so lifecycle operations
-    (takedown anti-join, compaction) feed the one code path the full
-    build runs and never touch payloads."""
-    return _video_pairs(
-        index, index, _video_nframes(index), max_hamming, min_frac
+    rot, bucket) index ALONE — frame-level rotation-bucket candidates
+    (a.video < b.video), Hamming verify on the hashes in the index,
+    and frame counts from the index's distinct fkeys (see
+    _video_nframes), so lifecycle operations (takedown anti-join,
+    compaction) feed the one code path the full build runs and never
+    touch payloads."""
+    a, b = index.alias("a"), index.alias("b")
+    fp = (
+        a.join(
+            b,
+            (F.col("a.rot") == F.col("b.rot"))
+            & (F.col("a.bucket") == F.col("b.bucket"))
+            & (
+                F.expr(f"a.doc_id div {_FRAME_KEY}")
+                < F.expr(f"b.doc_id div {_FRAME_KEY}")
+            ),
+        )
+        .filter(
+            F.bit_count(F.col("a.phash").bitwiseXOR(F.col("b.phash")))
+            <= max_hamming
+        )
+        .select(
+            F.expr(f"a.doc_id div {_FRAME_KEY}").alias("doc_a"),
+            (F.col("a.doc_id") % _FRAME_KEY).alias("frame_a"),
+            F.expr(f"b.doc_id div {_FRAME_KEY}").alias("doc_b"),
+            (F.col("b.doc_id") % _FRAME_KEY).alias("frame_b"),
+        )
     )
-
-
-def incremental_media_video_ingest(
-    new_media: DataFrame,
-    corpus_index: DataFrame,
-    max_hamming: int = PHASH_MAX_HAMMING,
-    min_frac: float = VIDEO_MIN_FRAC,
-    every_k: int = VIDEO_FRAME_STRIDE,
-) -> DataFrame:
-    """Incremental video ingest: fan out and hash ONLY the batch's
-    frames, screen them against the persisted corpus frame index —
-    the daily-batch shape every index family carries (the lifecycle
-    principle: no family ships build-only). Corpus-side inputs are
-    the 4-column index alone: Hamming verification reads the hashes
-    in it, and even the corpus videos' frame counts derive from its
-    distinct fkeys — no corpus payload is ever read. Assumes the
-    append-only id space (batch video ids larger than corpus ids),
-    the scheduled-daily-batch contract shared with
-    incremental_media_phash_ingest — and like it, the arrival-order
-    relaxation is the streaming replay device (the frame index is the
-    same (key, phash, rot, bucket) shape the
-    stream_media_phash_index_replay loop maintains, applied at frame
-    keys). Returns the scored video pairs whose LARGER id is in the
-    batch — exactly the full rebuild's pairs touching the batch."""
-    new_idx = video_frame_buckets(new_media, every_k)
-    all_idx = corpus_index.unionByName(new_idx)
-    return _video_pairs(
-        all_idx, new_idx, _video_nframes(all_idx), max_hamming, min_frac
-    )
+    return _video_scored(fp, _video_nframes(index), min_frac)
 
 
 def streaming_media_video_ingest_pairs(
@@ -1041,21 +888,23 @@ def streaming_media_video_ingest_pairs(
     min_frac: float = VIDEO_MIN_FRAC,
     every_k: int = VIDEO_FRAME_STRIDE,
 ) -> DataFrame:
-    """One micro-batch of STREAMING video frame-index maintenance,
-    ARRIVAL-ORDER AGNOSTIC — the video instance of the relaxation the
-    other five families carry. A video arrives WHOLE (one blob row),
-    so a video pair forms exactly once, in the batch whose member
-    arrived later — and everything the matched-frame-fraction score
-    needs for BOTH sides lives in the indexes at that moment: frame
-    hashes for the Hamming verify, distinct frame keys for the
+    """The video ingest screen, one code path for the daily batch
+    (`media_video_ingest`) and each streaming micro-batch
+    (`stream_media_video_index_replay`), ARRIVAL-ORDER AGNOSTIC like
+    the other five families' screens. A video arrives WHOLE (one blob
+    row), so a video pair forms exactly once, in the batch whose
+    member arrived later — and everything the matched-frame-fraction
+    score needs for BOTH sides lives in the indexes at that moment:
+    frame hashes for the Hamming verify, distinct frame keys for the
     denominators (_video_nframes). A batch therefore hashes only its
     own frames and touches no corpus payloads, the SimHash-class
     maintenance property. The cross join accepts either video-id
     order (normalized to doc_a < doc_b with per-side frame
     attribution following the normalization); in-batch pairs come
-    from a strict-order self-join. Accumulated over disjoint batches
-    covering a corpus, the union of per-batch outputs equals
-    `media_video_neardup` of the whole corpus."""
+    from a strict-order self-join. When every batch id exceeds every
+    corpus id, doc_b is the batch member of each pair. Accumulated
+    over disjoint batches covering a corpus, the union of per-batch
+    outputs equals `media_video_neardup` of the whole corpus."""
     fk = _FRAME_KEY
     new_idx = video_frame_buckets(new_media, every_k)
     nframes = _video_nframes(corpus_index.unionByName(new_idx))
@@ -1092,39 +941,7 @@ def streaming_media_video_ingest_pairs(
     va, vb = F.expr(f"a.doc_id div {fk}"), F.expr(f"b.doc_id div {fk}")
     cross = _norm_pairs(new_idx, corpus_index, va != vb)
     in_batch = _norm_pairs(new_idx, new_idx, va < vb)
-    agg = (
-        cross.unionByName(in_batch)
-        .groupBy("doc_a", "doc_b")
-        .agg(
-            F.countDistinct("frame_a").alias("matched_a"),
-            F.countDistinct("frame_b").alias("matched_b"),
-        )
-    )
-    na = nframes.select(
-        F.col("vid").alias("doc_a"), F.col("nf").alias("frames_a")
-    )
-    nb = nframes.select(
-        F.col("vid").alias("doc_b"), F.col("nf").alias("frames_b")
-    )
-    return (
-        agg.join(F.broadcast(na), "doc_a")
-        .join(F.broadcast(nb), "doc_b")
-        .withColumn(
-            "match_frac",
-            (F.col("matched_a") + F.col("matched_b")).cast("double")
-            / (F.col("frames_a") + F.col("frames_b")),
-        )
-        .filter(F.col("match_frac") >= min_frac)
-        .select(
-            "doc_a",
-            "doc_b",
-            "matched_a",
-            "matched_b",
-            "frames_a",
-            "frames_b",
-            "match_frac",
-        )
-    )
+    return _video_scored(cross.unionByName(in_batch), nframes, min_frac)
 
 
 def media_video_oracle_sql(
@@ -1144,8 +961,8 @@ def media_video_oracle_sql(
     all derive 1:1 from it, so this is exactly frame-index takedown
     (rebuild-without-X). ``batch_only`` restricts output to pairs
     whose larger id is in the 80%%-of-max-id batch (the shared ingest
-    split): under the append-only contract that is exactly the
-    incremental screen's output."""
+    split): as every batch id exceeds every corpus id there, that is
+    exactly the ingest screen's output."""
     fk = _FRAME_KEY
     flt = f"WHERE NOT ({where})" if where else ""
     batch = (
@@ -1203,9 +1020,11 @@ WHERE match_frac >= {min_frac}
 def media_phash_ingest_oracle_sql(
     max_hamming: int = PHASH_MAX_HAMMING,
 ) -> str:
-    """DuckDB twin of :func:`incremental_media_phash_ingest` over the
-    80%-of-max-id corpus/batch split (the dedup family's shared
-    device): batch rows screen against corpus + batch with
+    """DuckDB twin of the registered ``media_phash_ingest`` query over
+    the 80%-of-max-id corpus/batch split (the dedup family's shared
+    device): batch rows pair with lower ids, as every batch id
+    exceeds every corpus id — the pairs the ingest screen forms
+    against the corpus index and the batch itself, written
     ``doc_id > dup_of``."""
     return f"""
 WITH cut AS (SELECT max(doc_id) * 4 // 5 AS c FROM documents),

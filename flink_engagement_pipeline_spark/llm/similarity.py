@@ -752,88 +752,6 @@ def neardup_index(
     )
 
 
-def incremental_neardup_ingest(
-    new_emb: DataFrame,
-    corpus_index: DataFrame,
-    corpus_emb: DataFrame,
-    threshold: float = 0.9,
-    tables: int = NEARDUP_TABLES,
-    planes: int = NEARDUP_PLANES,
-    impl: str = "catalyst",
-) -> DataFrame:
-    """Incremental embedding near-dup ingest: screen a NEW batch of
-    vectors against a persisted corpus bucket index (`neardup_index`,
-    appended per batch) — the daily-batch shape the MinHash family
-    already has, completed for embedding-cosine dedup per the round-5
-    verdict.
-
-    Candidate generation touches only the (vec_id, t, bucket) index —
-    a bounded-key (t, bucket) equi-join of the batch's 16N index rows
-    against index ∪ batch; corpus VECTORS are read id-keyed for the
-    exact-cosine verification of candidates only (the analog of the
-    MinHash ingest's text-for-verification-only contract). Assumes an
-    append-only id space (ingest ids larger than corpus ids), so
-    ``dup_of < vec_id`` covers both corpus matches and in-batch
-    ordering — the scheduled-daily-batch contract; for
-    arrival-order-agnostic ingestion use
-    :func:`streaming_neardup_ingest_pairs`, which relaxes exactly
-    this clause. Returns (vec_id, dup_of, cosine) for every
-    >= threshold match of a new vector against corpus + batch.
-    """
-    new_idx = neardup_index(new_emb, tables, planes, impl)
-    all_idx = corpus_index.unionByName(new_idx)
-    cand = (
-        new_idx.alias("a")
-        .join(
-            all_idx.alias("b"),
-            (F.col("a.t") == F.col("b.t"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.vec_id") > F.col("b.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("vec_id"),
-            F.col("b.vec_id").alias("dup_of"),
-        )
-        .distinct()
-    )
-    # candidates materialized once, corpus-side vector read semi-pruned
-    # to the exact dup_of id set (round-7 probe discipline, see
-    # llm/dedup.py:_semi_prune — unpruned, the verify join shuffles
-    # every corpus vector); the batch side stays batch-sized by the
-    # ingest contract
-    from .dedup import _semi_prune
-
-    cand = cand.localCheckpoint()
-    # vectors ride the verify joins as raw array<float> and widen to
-    # double only INSIDE the cosine — float->double widening is exact,
-    # so the result is bit-identical, and the join-intermediate
-    # shuffle (candidate pairs x vector payload, the verify's
-    # dominant cost at scale — see near_dup_pairs) is halved
-    va = new_emb.select("vec_id", F.col("embedding").alias("e_a"))
-    all_vecs = new_emb.select("vec_id", "embedding").unionByName(
-        corpus_emb.select("vec_id", "embedding")
-    )
-    vb = _semi_prune(
-        all_vecs,
-        cand.select(F.col("dup_of").alias("vec_id")).distinct(),
-        "vec_id",
-        n_ids=cand.count(),
-    ).select(
-        F.col("vec_id").alias("dup_of"),
-        F.col("embedding").alias("e_b"),
-    )
-    ea, eb = _as_double(F.col("e_a")), _as_double(F.col("e_b"))
-    cos = _dot(ea, eb) / (
-        F.sqrt(_dot(ea, ea)) * F.sqrt(_dot(eb, eb))
-    )
-    return (
-        cand.join(va, "vec_id")
-        .join(vb, "dup_of")
-        .select("vec_id", "dup_of", cos.alias("cosine"))
-        .filter(F.col("cosine") >= threshold)
-    )
-
-
 def streaming_neardup_ingest_pairs(
     new_emb: DataFrame,
     corpus_index: DataFrame,
@@ -842,28 +760,29 @@ def streaming_neardup_ingest_pairs(
     tables: int = NEARDUP_TABLES,
     planes: int = NEARDUP_PLANES,
 ) -> DataFrame:
-    """One micro-batch of STREAMING hyperplane-LSH index maintenance,
-    ARRIVAL-ORDER AGNOSTIC — the embedding instance of the relaxation
-    `llm/dedup.py:streaming_portable_ingest_pairs` makes for text:
-    `incremental_neardup_ingest` assumes an append-only id space and
-    keys candidates on ``new.vec_id > other.vec_id``, which silently
+    """The hyperplane-LSH ingest screen, one code path for the daily
+    batch (`embedding_neardup_ingest`) and each streaming micro-batch
+    (`stream_neardup_index_replay`), ARRIVAL-ORDER AGNOSTIC — the
+    embedding instance of `llm/dedup.py:streaming_portable_ingest_pairs`:
+    candidates are never keyed on ``new.vec_id > other.vec_id``, which
     loses the pair when a stream delivers a smaller id after a larger
-    one. Here the cross join against the persisted index accepts
-    either id order (each pair forms exactly once, in the batch whose
-    member arrived LATER — the earlier member exists only on the index
-    side), in-batch pairs come from a strict-order self-join, and
-    output is normalized to (vec_a < vec_b, cosine). Accumulated over
-    disjoint batches covering a corpus, the union of per-batch outputs
-    equals `near_dup_pairs` of the whole corpus — bucket, candidate,
-    and verify math are shared, so the equality is exact
-    (hash-matched against the LSH-aware full-rebuild oracle by
+    one. The cross join against the persisted index accepts either id
+    order (each pair forms exactly once, in the batch whose member
+    arrived LATER — the earlier member exists only on the index side),
+    in-batch pairs come from a strict-order self-join, and output is
+    normalized to (vec_a < vec_b, cosine). When every batch id exceeds
+    every corpus id, vec_b is the batch member of each pair.
+    Accumulated over disjoint batches covering a corpus, the union of
+    per-batch outputs equals `near_dup_pairs` of the whole corpus —
+    bucket, candidate, and verify math are shared, so the equality is
+    exact (hash-matched against the LSH-aware full-rebuild oracle by
     `stream_neardup_index_replay`).
 
-    Same 100 TB shape as the batch ingest: candidate generation
-    touches only the 3-column (vec_id, t, bucket) index; corpus
-    VECTORS are read id-keyed for exact-cosine verification of
-    candidates only (semi-pruned scan), riding the joins as raw
-    array<float> and widening to double inside the cosine."""
+    100 TB shape: candidate generation touches only the 3-column
+    (vec_id, t, bucket) index; corpus VECTORS are read id-keyed for
+    exact-cosine verification of candidates only (semi-pruned scan),
+    riding the joins as raw array<float> and widening to double inside
+    the cosine."""
     from .dedup import _semi_prune
 
     new_idx = neardup_index(new_emb, tables, planes)
@@ -943,14 +862,10 @@ SELECT vec_id, CAST(cl AS INT) AS cluster FROM acorp
 """
 
 
-def neardup_ingest_oracle_sql(threshold: float = 0.9) -> str:
-    """DuckDB twin of :func:`incremental_neardup_ingest` over the
-    embeddings fixture with the 80%-of-max-id corpus/batch split:
-    buckets from the SAME `_neardup_planes()` literals
-    (list_dot_product is bit-identical to the Spark fold on the same
-    doubles — pinned by the cosine_topk oracle), so the candidate sets
-    match exactly, and the exact-cosine verification matches
-    bit-for-bit."""
+def _neardup_structs_oracle_sql() -> str:
+    """DuckDB-side (t, bucket) struct list of the pinned hyperplane
+    tables over a ``v DOUBLE[]`` column — the oracle twin of
+    _neardup_tables_sql, shared by the ingest and pair oracles."""
     planes = _neardup_planes()
 
     def dot_sql(w) -> str:
@@ -964,10 +879,23 @@ def neardup_ingest_oracle_sql(threshold: float = 0.9) -> str:
             for j in range(NEARDUP_PLANES)
         )
 
-    structs = ",".join(
+    return ",".join(
         f"{{'t': {t}, 'bucket': ({bucket_sql(t)})}}"
         for t in range(NEARDUP_TABLES)
     )
+
+
+def neardup_ingest_oracle_sql(threshold: float = 0.9) -> str:
+    """DuckDB twin of the registered ``embedding_neardup_ingest``
+    query over the embeddings fixture with the 80%-of-max-id
+    corpus/batch split: every batch id exceeds every corpus id, so
+    the ingest screen's pairs are exactly the candidate pairs whose
+    larger id is in the batch, written ``vec_id > dup_of``. Buckets
+    come from the SAME `_neardup_planes()` literals (list_dot_product
+    is bit-identical to the Spark fold on the same doubles — pinned
+    by the cosine_topk oracle), so the candidate sets match exactly,
+    and the exact-cosine verification matches bit-for-bit."""
+    structs = _neardup_structs_oracle_sql()
     return f"""
 WITH cut AS (SELECT max(vec_id) * 4 // 5 AS c FROM embeddings),
 e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),
@@ -1001,7 +929,6 @@ def near_dup_pairs(
     threshold: float = 0.9,
     tables: int = NEARDUP_TABLES,
     planes: int = NEARDUP_PLANES,
-    impl: str = "catalyst",
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs: cosine(a, b) >= threshold.
 
@@ -1041,7 +968,7 @@ def near_dup_pairs(
     planted near-dup clusters in tests/test_llm_ops.py instead.
     """
     return neardup_pairs_from_index(
-        neardup_index(emb, tables, planes, impl), emb, threshold
+        neardup_index(emb, tables, planes), emb, threshold
     )
 
 
@@ -1135,23 +1062,7 @@ def neardup_pairs_oracle_sql(
     Unlike `near_dup_oracle_sql` (the brute-force baseline), this
     reproduces the CANDIDATE set too, so it hash-matches at any
     threshold regardless of LSH recall."""
-    planes = _neardup_planes()
-
-    def dot_sql(w) -> str:
-        arr = "[" + ",".join(f"{float(x)!r}" for x in w) + "]"
-        return f"list_dot_product(v, {arr})"
-
-    def bucket_sql(t: int) -> str:
-        return " + ".join(
-            f"((CASE WHEN {dot_sql(planes[t * NEARDUP_PLANES + j])} > 0"
-            f" THEN 1 ELSE 0 END) * {1 << j})"
-            for j in range(NEARDUP_PLANES)
-        )
-
-    structs = ",".join(
-        f"{{'t': {t}, 'bucket': ({bucket_sql(t)})}}"
-        for t in range(NEARDUP_TABLES)
-    )
+    structs = _neardup_structs_oracle_sql()
     flt = f"WHERE NOT ({where})" if where else ""
     return f"""
 WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM embeddings),

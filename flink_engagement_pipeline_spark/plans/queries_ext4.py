@@ -370,7 +370,10 @@ def q_cdc_retract_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 # query must estimate with the exact same sketch so the two queries
 # cross-check each other. Importing queries_ext3 registers its queries,
 # so this import stays here: queries_stream imports this module first,
-# and registration order is part of the driver contract.
+# and registration order is part of the driver contract. Moved to the
+# top of this module, it registers ext3's queries ahead of this
+# module's first ones, which reorders REGISTRY.md and changes the
+# computed gate window (tests/test_gate_window.py).
 from .queries_ext3 import _HLL_EST, _HLL_M, _HLL_SCALE, _cents  # noqa: E402
 
 

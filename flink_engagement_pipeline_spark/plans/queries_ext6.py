@@ -144,8 +144,8 @@ def run_minhash_index_replay(
         "verdict's top capability ask. The documents fixture replays "
         "as two micro-batches carrying DISJOINT halves (even doc_ids "
         "in batch 0, odd in batch 1 — disjoint by PARITY, not by id "
-        "range, so arrival order is deliberately NOT id order and the "
-        "batch ingest's append-only-id contract would lose every "
+        "range, so arrival order is deliberately NOT id order and a "
+        "screen keyed on new id > indexed id would lose every "
         "(odd-then-even) pair). Each batch builds its portable-"
         "MinHash bands, joins them against the PERSISTED band index "
         "committed by earlier batches (plus itself for in-batch "
@@ -210,7 +210,9 @@ def run_simhash_index_replay(
             ).parquet(*prev).select("doc_id", "simhash", "rot", "bucket")
         else:
             corpus_idx = batch_idx.limit(0)
-        new_pairs = ld.streaming_simhash_ingest_pairs(half, corpus_idx)
+        new_pairs = ld.streaming_hamming_ingest_pairs(
+            batch_idx, corpus_idx, "simhash", max_hamming=8
+        )
         index_sink.write_batch(batch_idx, bid)
         pairs_sink.write_batch(new_pairs, bid)
 
@@ -235,9 +237,10 @@ def run_simhash_index_replay(
         "4-column index (no id-keyed text scan at all, unlike the "
         "MinHash replay's exact-Jaccard verify). Arrival-order "
         "agnostic like its MinHash twin "
-        "(llm/dedup.py:streaming_simhash_ingest_pairs relaxes the "
-        "batch ingest's append-only-id contract; the parity split "
-        "makes arrival order differ from id order on purpose). The "
+        "(llm/dedup.py:streaming_hamming_ingest_pairs, the screen "
+        "docs_simhash_ingest also runs, accepts either id order; the "
+        "parity split makes arrival order differ from id order on "
+        "purpose). The "
         "union of committed pair deltas hash-matches the whole-corpus "
         "simhash_near_pairs REBUILD oracle — the same generator "
         "docs_simhash_pairs and docs_simhash_index_delete use, so "
@@ -331,7 +334,7 @@ def q_embedding_ivf_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(r8 did MinHash bands + IVF codes). The full simhash_buckets "
         "index is built, a takedown id set (doc_id % 5 == 0, ~20%, an "
         "arbitrary-id anti-join) is removed, and pairs are served by "
-        "the factored tail simhash_pairs_from_index — the identical "
+        "the factored tail hamming_pairs_from_index — the identical "
         "code path docs_simhash_pairs runs — so deleted and undeleted "
         "serving are one pipeline. Output hash-matches the "
         "REBUILD-WITHOUT-X oracle (same WHERE-parameterized SQL "
@@ -352,7 +355,7 @@ def q_docs_simhash_index_delete(
     index = ld.simhash_buckets(docs)
     del_ids = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
     kept = index.join(F.broadcast(del_ids), "doc_id", "anti")
-    return ld.simhash_pairs_from_index(kept)
+    return ld.hamming_pairs_from_index(kept, "simhash", max_hamming=8)
 
 
 @register(
@@ -445,7 +448,11 @@ def q_media_phash_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "index has the full lifecycle (build, ingest, delete) in one "
         "round. The batch (doc_id >= 80% of max, the dedup family's "
         "shared split) hashes ONLY its own blobs and screens against "
-        "the persisted corpus bucket index; verification is "
+        "the persisted corpus bucket index and itself through the "
+        "Hamming families' one ingest screen "
+        "(llm/dedup.py:streaming_hamming_ingest_pairs, the same code "
+        "path stream_media_phash_index_replay runs per micro-batch); "
+        "verification is "
         "bit_count(xor) on index rows — corpus payloads are never "
         "read, the SimHash-class takedown-friendly property. "
         "Hash-matches the DuckDB twin generated from the same "
@@ -462,7 +469,14 @@ def q_media_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = fan_out(lm.docs_as_media(docs.filter(F.col("doc_id") < cut)))
     new = fan_out(lm.docs_as_media(docs.filter(F.col("doc_id") >= cut)))
     corpus_index = lm.media_phash_buckets(corpus)
-    return lm.incremental_media_phash_ingest(new, corpus_index)
+    return ld.streaming_hamming_ingest_pairs(
+        lm.media_phash_buckets(new),
+        corpus_index,
+        "phash",
+        max_hamming=lm.PHASH_MAX_HAMMING,
+    ).select(
+        F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("dup_of"), "hamming"
+    )
 
 
 @register(
@@ -474,7 +488,7 @@ def q_media_phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "born (no index family ships append-only again, the r8 "
         "verdict's lifecycle principle). Full bucket index, takedown "
         "set doc_id % 6 == 0 anti-joined away, pairs served by the "
-        "factored tail media_phash_pairs_from_index — one code path "
+        "factored tail hamming_pairs_from_index — one code path "
         "deleted or not. Like SimHash, verification reads only "
         "hashes IN the index, so a deleted blob's payload is never "
         "touched: no candidate, no verify, no scan. Hash-matches the "
@@ -491,7 +505,9 @@ def q_media_phash_index_delete(
     index = lm.media_phash_buckets(fan_out(lm.docs_as_media(docs)))
     del_ids = docs.filter(F.col("doc_id") % 6 == 0).select("doc_id")
     kept = index.join(F.broadcast(del_ids), "doc_id", "anti")
-    return lm.media_phash_pairs_from_index(kept)
+    return ld.hamming_pairs_from_index(
+        kept, "phash", max_hamming=lm.PHASH_MAX_HAMMING
+    )
 
 
 def run_media_phash_index_replay(
@@ -517,7 +533,9 @@ def run_media_phash_index_replay(
             ).parquet(*prev).select("doc_id", "phash", "rot", "bucket")
         else:
             corpus_idx = batch_idx.limit(0)
-        new_pairs = lm.streaming_media_phash_ingest_pairs(half, corpus_idx)
+        new_pairs = ld.streaming_hamming_ingest_pairs(
+            batch_idx, corpus_idx, "phash", max_hamming=lm.PHASH_MAX_HAMMING
+        )
         index_sink.write_batch(batch_idx, bid)
         pairs_sink.write_batch(new_pairs, bid)
 
@@ -541,7 +559,7 @@ def run_media_phash_index_replay(
         "commits ONLY its own (doc_id, phash, rot, bucket) rows and "
         "verified pair delta to batchId-keyed exactly-once sinks; "
         "arrival-order agnostic via "
-        "llm/multimodal.py:streaming_media_phash_ingest_pairs), and "
+        "llm/dedup.py:streaming_hamming_ingest_pairs), and "
         "like SimHash the cheapest kind to maintain: Hamming "
         "verification reads hashes carried by the joined index rows, "
         "so a daily batch hashes only its own blobs and touches no "

@@ -117,8 +117,9 @@ def run_neardup_index_replay(
         "through the semi-pruned scan (the MinHash-class verify; "
         "float payloads widen to double inside the cosine). "
         "Arrival-order agnostic "
-        "(llm/similarity.py:streaming_neardup_ingest_pairs relaxes "
-        "the batch ingest's append-only-id contract). NEW this "
+        "(llm/similarity.py:streaming_neardup_ingest_pairs, the screen "
+        "embedding_neardup_ingest also runs, accepts either id "
+        "order). NEW this "
         "round and exercised under the gate: POLICY-TRIGGERED "
         "compaction — maybe_compact(upto=bid, max_live_deltas=1) "
         "folds batch 0's delta into an LSM snapshot inside the loop, "
@@ -252,17 +253,17 @@ def q_media_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ships build-only): the batch (video ids >= 80% of max, the "
         "dedup family's shared split) fans out and hashes ONLY its "
         "own frames and screens against the persisted corpus frame "
-        "index. Corpus-side inputs are the 4-column index alone — "
+        "index and itself; the screen is the one "
+        "stream_media_video_index_replay runs per micro-batch "
+        "(streaming_media_video_ingest_pairs in llm/multimodal.py). "
+        "Corpus-side inputs are the 4-column index alone — "
         "Hamming verify reads the hashes in it, and even corpus "
         "frame counts derive from its distinct frame keys "
         "(_video_nframes), so no corpus payload is ever read (the "
         "SimHash-class takedown-friendly property, now for video). "
         "Hash-matches the one video oracle generator restricted to "
-        "pairs whose larger id is in the batch (under the append-"
-        "only-id contract that IS the incremental screen's output); "
-        "arrival-order-agnostic maintenance of this same index shape "
-        "is the proven stream_media_phash_index_replay loop applied "
-        "at frame keys."
+        "pairs whose larger id is in the batch (every batch id "
+        "exceeds every corpus id, so that IS the screen's output)."
     ),
     tags=("llm", "multimodal", "media", "video", "incremental"),
 )
@@ -275,7 +276,7 @@ def q_media_video_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         fan_out(lm.docs_as_media(docs.filter(F.col("doc_id") < cut)))
     )
     new = fan_out(lm.docs_as_media(docs.filter(F.col("doc_id") >= cut)))
-    return lm.incremental_media_video_ingest(new, corpus_idx)
+    return lm.streaming_media_video_ingest_pairs(new, corpus_idx)
 
 
 def run_media_video_index_replay(

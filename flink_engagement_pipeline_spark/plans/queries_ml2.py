@@ -48,15 +48,19 @@ _QSCORE = f"""floor((
         "Incremental ingest dedup, fully oracled: the corpus (doc_id "
         "below 80% of max id) is represented ONLY by its persisted "
         "portable-MinHash band index; the ingest batch (the remaining "
-        "ids) builds its own bands, candidates come from one "
-        "(band, key) equi-join against index ∪ batch, and exact "
-        "Jaccard verifies candidates only — corpus TEXT is read just "
-        "for verification, never for candidate generation. This is "
-        "the daily-batch shape of fuzzy dedup at 100 TB (the xxhash64 "
-        "twin `incremental_minhash_dedup` is the faster production "
-        "path; this portable form is the one a SQL oracle can "
-        "replicate end to end). Output: (doc_id, dup_of, jaccard) for "
-        "every >= 0.5 match of a new doc against corpus + batch."
+        "ids) builds its own bands and runs the family's one ingest "
+        "screen (llm/dedup.py:streaming_portable_ingest_pairs, the "
+        "same code path stream_minhash_index_replay runs per "
+        "micro-batch): (band, key) equi-joins against the index and "
+        "the batch itself, and exact Jaccard verifies candidates "
+        "only — corpus TEXT is read just for verification, never for "
+        "candidate generation. This is the daily-batch shape of fuzzy "
+        "dedup at 100 TB (the xxhash64 twin `incremental_minhash_dedup` "
+        "is the faster production path; this portable form is the one "
+        "a SQL oracle can replicate end to end). Every batch id "
+        "exceeds every corpus id, so each pair's larger id is the new "
+        "doc. Output: (doc_id, dup_of, jaccard) for every >= 0.5 "
+        "match of a new doc against corpus + batch."
     ),
     tags=("llm", "dedup", "minhash", "incremental"),
 )
@@ -66,7 +70,9 @@ def q_docs_minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") < cut)
     new = docs.filter(F.col("doc_id") >= cut)
     corpus_bands = ld.portable_band_index(ld.portable_base(corpus))
-    return ld.incremental_portable_ingest(new, corpus_bands, corpus)
+    return ld.streaming_portable_ingest_pairs(new, corpus_bands, corpus).select(
+        F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("dup_of"), "jaccard"
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1459,9 +1465,13 @@ GROUP BY 1, 2
         "Incremental SimHash ingest, fully oracled: the corpus (doc_id "
         "below 80% of max id) is represented ONLY by its persisted "
         "bucket index (simhash_buckets: doc_id, simhash, rot, bucket); "
-        "the ingest batch builds its own buckets, candidates come from "
-        "one (rot, bucket) equi-join against index ∪ batch, and "
-        "Hamming verification (bit_count(xor) <= 8) runs on the "
+        "the ingest batch builds its own buckets and runs the "
+        "Hamming families' one ingest screen "
+        "(llm/dedup.py:streaming_hamming_ingest_pairs, the same code "
+        "path stream_simhash_index_replay runs per micro-batch): "
+        "(rot, bucket) equi-joins against the index and the batch "
+        "itself, and Hamming verification (bit_count(xor) <= 8) runs "
+        "on the "
         "signatures ALREADY IN THE INDEX — so unlike the MinHash "
         "ingest, corpus text is never read at all, not even for "
         "verification. That makes SimHash the cheapest daily-batch "
@@ -1480,7 +1490,11 @@ def q_docs_simhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = docs.filter(F.col("doc_id") < cut)
     new = docs.filter(F.col("doc_id") >= cut)
     corpus_index = ld.simhash_buckets(corpus)
-    return ld.incremental_simhash_ingest(new, corpus_index)
+    return ld.streaming_hamming_ingest_pairs(
+        ld.simhash_buckets(new), corpus_index, "simhash", max_hamming=8
+    ).select(
+        F.col("doc_b").alias("doc_id"), F.col("doc_a").alias("dup_of"), "hamming"
+    )
 
 
 @register(
@@ -1491,9 +1505,12 @@ def q_docs_simhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "corpus (vec_id below 80% of max id) is represented ONLY by "
         "its persisted hyperplane-LSH index (neardup_index: vec_id, "
         "table, bucket); the ingest batch builds its own 16-table "
-        "buckets, candidates come from one (table, bucket) equi-join "
-        "against index ∪ batch, and exact cosine verifies candidates "
-        "only — raw vectors are read id-keyed for verification, never "
+        "buckets and runs the family's one ingest screen "
+        "(llm/similarity.py:streaming_neardup_ingest_pairs, the same "
+        "code path stream_neardup_index_replay runs per micro-batch): "
+        "(table, bucket) equi-joins against the index and the batch "
+        "itself, and exact cosine verifies candidates only — raw "
+        "vectors are read id-keyed for verification, never "
         "for candidate generation (the MinHash ingest contract, "
         "applied to vectors). The DuckDB oracle generates its buckets "
         "from the SAME pinned hyperplane literals (list_dot_product "
@@ -1513,4 +1530,8 @@ def q_embedding_neardup_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") < cut)
     new = emb.filter(F.col("vec_id") >= cut)
     corpus_index = ls.neardup_index(corpus)
-    return ls.incremental_neardup_ingest(new, corpus_index, corpus, threshold=0.35)
+    return ls.streaming_neardup_ingest_pairs(
+        new, corpus_index, corpus, threshold=0.35
+    ).select(
+        F.col("vec_b").alias("vec_id"), F.col("vec_a").alias("dup_of"), "cosine"
+    )

@@ -19,6 +19,10 @@ from pyspark.sql import functions as F
 
 from .. import tmpdirs
 from ..operators.dedup import DEDUP_ORACLE_SQL
+# This import registers queries_ext4's queries (and, mid-module, ext3's)
+# before plans/__init__.py reaches either module: registration order
+# is part of the driver contract, so moving this line, or ext4's ext3
+# import, reorders REGISTRY.md and can change the computed gate window.
 from .queries_ext4 import RETRACT_FINAL_ORACLE
 from ..sources.datagen import gen_events
 from ..sources.tables import load_table

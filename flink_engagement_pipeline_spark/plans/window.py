@@ -56,6 +56,13 @@ REPROVE: dict[str, int] = {
     # the fan-out plans its enrichment once per run; the dedup state
     # schema changed with it
     "stream_replay_enriched": 16,
+    # the batch ingest queries run their family's arrival-order-agnostic
+    # screen (the streaming replays' code path); new plan skeletons
+    "docs_minhash_ingest": 16,
+    "docs_simhash_ingest": 16,
+    "embedding_neardup_ingest": 16,
+    "media_phash_ingest": 16,
+    "media_video_ingest": 16,
 }
 
 Records = Mapping[int, Mapping[str, Mapping]]

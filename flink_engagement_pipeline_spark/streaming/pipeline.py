@@ -100,7 +100,10 @@ def stage_replay_dir(
     (plus b.parquet). Under maxFilesPerTrigger=1 each copy is one
     micro-batch, so a second copy replays every key of the first.
     Idempotent, so a replay restarting from its checkpoint in the same
-    ``tmp`` re-stages over its own directory. Returns the directory."""
+    ``tmp`` re-stages over its own directory. Returns the directory.
+    Raises ValueError for ``copies`` other than 1 or 2."""
+    if copies not in (1, 2):
+        raise ValueError(f"copies must be 1 or 2, got {copies!r}")
     data_dir = os.path.join(tmp, table)
     os.makedirs(data_dir, exist_ok=True)
     src = os.path.abspath(os.path.join(sf_dir, f"{table}.parquet"))
@@ -425,18 +428,20 @@ def run_stream_stream_join(
     same source is filtered into two event-time streams and joined
     (``how``: "inner", "left_outer" or "full_outer"). The outer forms
     need ``max_files_per_trigger=1`` so the watermark-advancing
-    sentinel and the drain files arrive as separate micro-batches."""
+    sentinel and the drain files arrive as separate micro-batches.
+    Raises ValueError for any other ``how``, before any Spark work."""
+    outer = {"left_outer": "leftOuter", "full_outer": "fullOuter"}
+    if how != "inner" and how not in outer:
+        raise ValueError(
+            f"how must be 'inner', 'left_outer' or 'full_outer', got {how!r}"
+        )
     ev = read_events_stream(spark, events_dir, max_files_per_trigger)
     clicks = ev.filter(F.col("event_type") == "click")
     purchases = ev.filter(F.col("event_type") == "purchase")
     if how == "inner":
         out = click_purchase_join(clicks, purchases)
     else:
-        out = click_purchase_left_join(
-            clicks,
-            purchases,
-            how="fullOuter" if how == "full_outer" else "leftOuter",
-        )
+        out = click_purchase_left_join(clicks, purchases, how=outer[how])
     run_stream(out, sink.write_batch, checkpoint_dir)
     sink.close()
 

@@ -209,7 +209,7 @@ def test_stream_simhash_replay_matches_batch_rebuild(spark, sf_dir, tmp_path):
     per-batch pair deltas must equal the whole-corpus
     simhash_near_pairs rebuild, each index delta must contain only its
     own parity half, and the batch's corpus-side input must be the
-    index alone (structural: streaming_simhash_ingest_pairs takes no
+    index alone (structural: streaming_hamming_ingest_pairs takes no
     text argument)."""
     from flink_engagement_pipeline_spark.plans.queries_ext6 import (
         run_simhash_index_replay,
@@ -242,16 +242,19 @@ def test_stream_simhash_replay_matches_batch_rebuild(spark, sf_dir, tmp_path):
 
 def test_streaming_simhash_ingest_arrival_order(spark):
     """Unit pin: a smaller id arriving after its larger near-dup
-    partner (already in the index) must still pair — the relaxation
-    over incremental_simhash_ingest's append-only-id contract."""
+    partner (already in the index) must still pair — a screen keyed
+    on new id > indexed id would lose it."""
     rows = [
         (10, "alpha beta gamma delta epsilon zeta"),
         (3, "alpha beta gamma delta epsilon zeta"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     idx = ld.simhash_buckets(docs.filter(F.col("doc_id") == 10))
-    got = ld.streaming_simhash_ingest_pairs(
-        docs.filter(F.col("doc_id") == 3), idx
+    got = ld.streaming_hamming_ingest_pairs(
+        ld.simhash_buckets(docs.filter(F.col("doc_id") == 3)),
+        idx,
+        "simhash",
+        max_hamming=8,
     ).collect()
     assert [(r["doc_a"], r["doc_b"], r["hamming"]) for r in got] == [
         (3, 10, 0)
@@ -305,8 +308,13 @@ def test_streaming_media_phash_arrival_order(spark):
     idx = lm.media_phash_buckets(
         lm.docs_as_media(docs.filter(F.col("doc_id") == 10))
     )
-    got = lm.streaming_media_phash_ingest_pairs(
-        lm.docs_as_media(docs.filter(F.col("doc_id") == 3)), idx
+    got = ld.streaming_hamming_ingest_pairs(
+        lm.media_phash_buckets(
+            lm.docs_as_media(docs.filter(F.col("doc_id") == 3))
+        ),
+        idx,
+        "phash",
+        max_hamming=lm.PHASH_MAX_HAMMING,
     ).collect()
     assert [(r["doc_a"], r["doc_b"], r["hamming"]) for r in got] == [
         (3, 10, 0)
@@ -410,16 +418,21 @@ def test_media_phash_lifecycle_equivalences(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     media = lm.docs_as_media(docs)
     cut = docs.agg(F.expr("max(doc_id) * 4 div 5").alias("c")).first()["c"]
-    # ingest == rebuild: batch-vs-(corpus ∪ batch) matches the full
-    # build's pairs with their larger id in the batch
+    # ingest == rebuild: the screen's pairs against the corpus index
+    # and the batch itself match the full build's pairs with their
+    # larger id in the batch
     corpus_idx = lm.media_phash_buckets(
         lm.docs_as_media(docs.filter(F.col("doc_id") < cut))
     )
     got = {
-        (r["doc_id"], r["dup_of"], r["hamming"])
-        for r in lm.incremental_media_phash_ingest(
-            lm.docs_as_media(docs.filter(F.col("doc_id") >= cut)),
+        (r["doc_b"], r["doc_a"], r["hamming"])
+        for r in ld.streaming_hamming_ingest_pairs(
+            lm.media_phash_buckets(
+                lm.docs_as_media(docs.filter(F.col("doc_id") >= cut))
+            ),
             corpus_idx,
+            "phash",
+            max_hamming=lm.PHASH_MAX_HAMMING,
         ).collect()
     }
     full = {
@@ -433,7 +446,9 @@ def test_media_phash_lifecycle_equivalences(spark, sf_dir):
     del_ids = docs.filter(F.col("doc_id") % 6 == 0).select("doc_id")
     kept = lm.media_phash_buckets(media).join(del_ids, "doc_id", "anti")
     pk = lambda r: (r["doc_a"], r["doc_b"], r["hamming"])  # noqa: E731
-    served = lm.media_phash_pairs_from_index(kept)
+    served = ld.hamming_pairs_from_index(
+        kept, "phash", max_hamming=lm.PHASH_MAX_HAMMING
+    )
     rebuilt = lm.media_phash_pairs(
         lm.docs_as_media(docs.filter(F.col("doc_id") % 6 != 0))
     )
@@ -486,7 +501,9 @@ def test_simhash_index_delete_equals_rebuild(spark, sf_dir):
         map(key, rebuilt.collect())
     )
     pk = lambda r: (r["doc_a"], r["doc_b"], r["hamming"])  # noqa: E731
-    served = ld.simhash_pairs_from_index(deleted)
+    served = ld.hamming_pairs_from_index(
+        deleted, "simhash", max_hamming=8
+    )
     from_rebuild = ld.simhash_near_pairs(survivors)
     assert sorted(map(pk, served.collect())) == sorted(
         map(pk, from_rebuild.collect())

@@ -317,8 +317,8 @@ def test_stream_ivf_replay_matches_pinned_rebuild(spark, sf_dir, tmp_path):
 
 def test_streaming_neardup_ingest_arrival_order(spark):
     """Unit pin: a smaller id arriving after its identical-embedding
-    partner (already in the index) must still pair — the relaxation
-    over incremental_neardup_ingest's append-only-id contract."""
+    partner (already in the index) must still pair — a screen keyed
+    on new id > indexed id would lose it."""
     vec = [1.0] * 64
     emb = spark.createDataFrame(
         [(10, vec), (3, vec)], "vec_id long, embedding array<float>"
@@ -487,7 +487,7 @@ def test_media_video_lifecycle_equivalences(spark, sf_dir):
     got = sorted(
         map(
             pk,
-            lm.incremental_media_video_ingest(
+            lm.streaming_media_video_ingest_pairs(
                 lm.docs_as_media(docs.filter(F.col("doc_id") >= cut)),
                 corpus_idx,
             ).collect(),

@@ -591,18 +591,20 @@ def test_lsh_chain_single_exchange(docs):
 
 
 def test_incremental_simhash_matches_full_rebuild(docs):
-    """SimHash ingest (new batch vs persisted bucket index) must find
-    EXACTLY the pairs a full-corpus simhash_near_pairs run finds among
-    pairs whose larger id is in the new batch — appending to the index
-    is lossless vs rebuilding (the MinHash rebuild-equivalence device,
-    applied to SimHash)."""
+    """SimHash ingest (new batch vs persisted bucket index, through the
+    Hamming ingest screen) must find EXACTLY the pairs a full-corpus
+    simhash_near_pairs run finds among pairs whose larger id is in the
+    new batch — appending to the index is lossless vs rebuilding (the
+    MinHash rebuild-equivalence device, applied to SimHash)."""
     split = 400
     corpus = docs.filter(F.col("doc_id") < split)
     batch = docs.filter(F.col("doc_id") >= split)
     idx = ld.simhash_buckets(corpus)
     got = {
-        (r["doc_id"], r["dup_of"], r["hamming"])
-        for r in ld.incremental_simhash_ingest(batch, idx).collect()
+        (r["doc_b"], r["doc_a"], r["hamming"])
+        for r in ld.streaming_hamming_ingest_pairs(
+            ld.simhash_buckets(batch), idx, "simhash", max_hamming=8
+        ).collect()
     }
     full = {
         (r["doc_b"], r["doc_a"], r["hamming"])
@@ -615,16 +617,16 @@ def test_incremental_simhash_matches_full_rebuild(docs):
 
 def test_incremental_neardup_matches_full_rebuild(emb):
     """Embedding near-dup ingest (new batch vs persisted hyperplane
-    index) must find EXACTLY the pairs a full-corpus near_dup_pairs
-    run finds among pairs whose larger id is in the new batch, at the
-    fixture-sized threshold."""
+    index, through the family's ingest screen) must find EXACTLY the
+    pairs a full-corpus near_dup_pairs run finds among pairs whose
+    larger id is in the new batch, at the fixture-sized threshold."""
     split = 400
     corpus = emb.filter(F.col("vec_id") < split)
     batch = emb.filter(F.col("vec_id") >= split)
     idx = ls.neardup_index(corpus)
     got = {
-        (r["vec_id"], r["dup_of"], round(r["cosine"], 9))
-        for r in ls.incremental_neardup_ingest(
+        (r["vec_b"], r["vec_a"], round(r["cosine"], 9))
+        for r in ls.streaming_neardup_ingest_pairs(
             batch, idx, corpus, threshold=0.35
         ).collect()
     }

@@ -337,7 +337,9 @@ def test_media_pair_builds_checkpoint_index_once(spark, sf_dir):
         (
             lm.media_phash_pairs(media),
             lm.media_phash_buckets(media),
-            lm.media_phash_pairs_from_index,
+            lambda idx: ld.hamming_pairs_from_index(
+                idx, "phash", lm.PHASH_MAX_HAMMING
+            ),
         ),
         (
             lm.media_video_neardup(media),

@@ -732,6 +732,27 @@ def test_stream_stream_join_matches_batch(spark, events_dir, tmp_path):
     assert len(expect) > 0
 
 
+def test_stream_stream_join_rejects_unknown_how(spark, events_dir, tmp_path):
+    """An unknown join type is refused before a stream starts, not run
+    as a left outer join."""
+    mem = sk.MemorySink()
+    with pytest.raises(ValueError, match="right_outer"):
+        sp.run_stream_stream_join(
+            spark, events_dir, mem, str(tmp_path / "ckpt"), how="right_outer"
+        )
+    assert mem.rows == []
+    assert not (tmp_path / "ckpt").exists()
+
+
+@pytest.mark.parametrize("copies", [0, 3])
+def test_stage_replay_dir_rejects_copies_outside_1_2(tmp_path, copies):
+    """Only one or two copies can be staged; any other count is refused
+    before the directory is made, not clipped to what fits."""
+    with pytest.raises(ValueError, match="copies"):
+        sp.stage_replay_dir(SF, str(tmp_path), copies=copies)
+    assert not (tmp_path / "events").exists()
+
+
 def test_bounded_dedup_state_eviction(spark, tmp_path):
     """dropDuplicatesWithinWatermark (bounded dedup state, T4 at
     scale): duplicates arriving within the watermark horizon are

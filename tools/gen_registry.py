@@ -1,7 +1,7 @@
 #!/usr/bin/env python
 """Regenerate REGISTRY.md: a generated index of every registered query
 (name, verification class, tags, one-line doc) so a reviewer can
-navigate the registry without walking the eleven plans/ modules.
+navigate the registry without walking the plans/ modules.
 
 Usage: python tools/gen_registry.py   # rewrites REGISTRY.md
 
