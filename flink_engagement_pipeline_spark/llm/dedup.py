@@ -1089,78 +1089,6 @@ def dedup_e2e(
     )
 
 
-def incremental_minhash_dedup(
-    new_docs: DataFrame,
-    corpus_bands: DataFrame,
-    corpus_docs: DataFrame,
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Incremental ingest dedup: screen a NEW batch of documents
-    against an already-indexed corpus (plus itself) without ever
-    re-reading the corpus text for candidate generation.
-
-    This is the production shape of fuzzy dedup at 100 TB: the corpus'
-    banded MinHash index (`minhash_bands`, persisted once, appended
-    per ingest) is the only corpus-side input to the candidate join —
-    a daily batch joins its bands against the index, and corpus TEXT
-    is touched only for the candidates that need exact verification
-    (an id-keyed semi-join-sized read at any corpus size). Returns
-    (doc_id, dup_of, jaccard): each new doc paired with every >=
-    threshold match in corpus+batch (dup_of < doc_id for in-batch
-    pairs, so the batch itself dedups too).
-    """
-    new_bands = minhash_bands(new_docs, n)
-    all_bands = corpus_bands.unionByName(new_bands)
-    cand = (
-        new_bands.alias("a")
-        .join(
-            all_bands.alias("b"),
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_sig") == F.col("b.band_sig"))
-            & (F.col("a.doc_id") > F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_id"), F.col("b.doc_id").alias("dup_of")
-        )
-        .distinct()
-    )
-    sh_new = fan_out(new_docs.select("doc_id", "text")).select(
-        "doc_id", shingles("text", n).alias("sh")
-    )
-    sh_all = sh_new.unionByName(
-        fan_out(corpus_docs.select("doc_id", "text")).select(
-            "doc_id", shingles("text", n).alias("sh")
-        )
-    )
-    # candidates materialized once (localCheckpoint, pairs-sized),
-    # then the corpus-side verify read is semi-pruned to the exact
-    # dup_of id set — this IS the "id-keyed read of candidates only"
-    # the ingest contract promises (see _semi_prune; unpruned, the
-    # join shuffled every corpus document's arrays at the 1M-doc
-    # probe scale). The batch side stays unpruned: batch-sized IS
-    # the ingest contract.
-    cand = cand.localCheckpoint()
-    a = sh_new.select(F.col("doc_id"), F.col("sh").alias("sh_a"))
-    b = _semi_prune(
-        sh_all,
-        cand.select(F.col("dup_of").alias("doc_id")).distinct(),
-        n_ids=cand.count(),
-    ).select(F.col("doc_id").alias("dup_of"), F.col("sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    return (
-        cand.join(a, "doc_id")
-        .join(b, "dup_of")
-        .select(
-            "doc_id",
-            "dup_of",
-            (inter.cast("double") / union).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= threshold)
-    )
-
-
 def minhash_bands(
     docs: DataFrame, n: int = 3, band_rows: int = BAND_ROWS
 ) -> DataFrame:

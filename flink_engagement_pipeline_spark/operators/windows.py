@@ -26,6 +26,8 @@ across engines and reruns.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -35,13 +37,49 @@ HOP_SIZE = "10 minutes"
 HOP_SLIDE = "5 seconds"
 
 
+_INTERVAL_UNIT_US = {
+    "microsecond": 1,
+    "millisecond": 1_000,
+    "second": 1_000_000,
+    "minute": 60_000_000,
+    "hour": 3_600_000_000,
+    "day": 86_400_000_000,
+    "week": 604_800_000_000,
+}
+
+
+def parse_interval_us(interval: str) -> int:
+    """Parse an interval string ('10 seconds', '1 hour 30 minutes') to
+    microseconds — the subset of Spark's CalendarInterval grammar that
+    window sizes and watermark delays accept.
+
+    The WHOLE string must match: an unanchored findall silently
+    misparsed decimal delays ('90.5 minutes' -> 5 minutes), so a guard
+    downstream could mis-evaluate a string Spark itself might accept
+    differently — anything with leftover characters (a '.', a stray
+    token) is rejected loudly instead."""
+    m = re.fullmatch(r"\s*(?:\d+\s*[a-zA-Z]+\s*)+", interval)
+    if m is None:
+        raise ValueError(
+            f"unparseable interval {interval!r}: expected one or "
+            "more '<integer> <unit>' terms (decimals and other tokens "
+            "are rejected rather than silently dropped)"
+        )
+    total = 0
+    for num, unit in re.findall(r"(\d+)\s*([a-zA-Z]+)", interval):
+        unit = unit.lower().rstrip("s")
+        if unit not in _INTERVAL_UNIT_US:
+            raise ValueError(f"unrecognized interval unit {unit!r} in {interval!r}")
+        total += int(num) * _INTERVAL_UNIT_US[unit]
+    return total
+
+
 def hop_engagement_sum(
     events: DataFrame,
     key: str = "user_id",
     measure: str = "value",
     size: str = HOP_SIZE,
     slide: str = HOP_SLIDE,
-    slide_us: int = 5_000_000,
 ) -> DataFrame:
     """Sliding-window SUM of the engagement measure per key (A1).
 
@@ -51,7 +89,8 @@ def hop_engagement_sum(
     1. pre-aggregate per (slide bucket, key): every event in the same
        5 s slide belongs to the *identical* 120 windows, so summing
        within the bucket first is lossless (integer cent sums are
-       exact and associative);
+       exact and associative). That holds only when ``size`` is a
+       multiple of ``slide``; any other pair raises ValueError;
     2. window the slide buckets: ``F.window(slide_start, size, slide)``
        then re-sum.
 
@@ -73,7 +112,10 @@ def hop_engagement_sum(
     partitioning; for power-law keys drop the repartition and accept
     the (window, key) shuffle, or salt via operators/skew.py.)
     """
-    size_us = _duration_us(size)
+    size_us = parse_interval_us(size)
+    slide_us = parse_interval_us(slide)
+    if size_us % slide_us:
+        raise ValueError("size must be a multiple of slide")
     sc = events.sparkSession.sparkContext
     # Aggregate integer *cents*, not DECIMAL: Spark's vectorized hash
     # aggregate has a primitive fast path for LongType that decimals
@@ -118,14 +160,6 @@ def hop_engagement_sum(
             "engagement_sum",
         )
     )
-
-
-def _duration_us(s: str) -> int:
-    qty, unit = s.split()
-    mult = {"seconds": 1, "second": 1, "minutes": 60, "minute": 60, "hours": 3600}[
-        unit
-    ]
-    return int(qty) * mult * 1_000_000
 
 
 def tumbling_stats(
@@ -239,8 +273,8 @@ def cumulate_engagement_sum(
     Exchange, of the pre-explode rows). Cent sums are exact,
     order-independent, and bit-identical to the oracle's
     DECIMAL(18,2)-sum-cast-double."""
-    max_us = _duration_us(max_size)
-    step_us = _duration_us(step)
+    max_us = parse_interval_us(max_size)
+    step_us = parse_interval_us(step)
     if max_us % step_us:
         raise ValueError("max_size must be a multiple of step")
     sc = events.sparkSession.sparkContext

@@ -55,9 +55,8 @@ _QSCORE = f"""floor((
         "the batch itself, and exact Jaccard verifies candidates "
         "only — corpus TEXT is read just for verification, never for "
         "candidate generation. This is the daily-batch shape of fuzzy "
-        "dedup at 100 TB (the xxhash64 twin `incremental_minhash_dedup` "
-        "is the faster production path; this portable form is the one "
-        "a SQL oracle can replicate end to end). Every batch id "
+        "dedup at 100 TB, in the portable form a SQL oracle can "
+        "replicate end to end. Every batch id "
         "exceeds every corpus id, so each pair's larger id is the new "
         "doc. Output: (doc_id, dup_of, jaccard) for every >= 0.5 "
         "match of a new doc against corpus + batch."

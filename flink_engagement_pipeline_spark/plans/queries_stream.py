@@ -128,7 +128,7 @@ GROUP BY 1, 2, 3
         "mode, writing closed windows to an exactly-once parquet "
         "sink. Append mode only emits a window once the watermark "
         "passes its end, so a second micro-batch carries one sentinel "
-        "event 20 minutes past the fixture's max timestamp — it "
+        "event 2 hours past the fixture's max timestamp — it "
         "advances the watermark past every real window's end (its own "
         "window never closes, so it never appears in the output). The "
         "durable sink contents therefore equal the plain batch "
@@ -140,7 +140,7 @@ GROUP BY 1, 2, 3
 )
 def q_stream_windowed_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tmpdirs.mkdtemp(prefix="stream_win_")  # outlives the returned plan
-    events_dir = _sentinel_replay_dir(spark, sf_dir, tmp)
+    events_dir = _staged_sentinel_drain_dir(spark, sf_dir, tmp, _SENTINEL, 0)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
     with replay_width(spark):
         run_windowed(
@@ -190,26 +190,20 @@ GROUP BY 1, 2, 3
     tags=("streaming", "watermark", "late-data", "exactly-once"),
 )
 def q_stream_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import glob as _glob
     import shutil
-    import time as _time
 
     tmp = tmpdirs.mkdtemp(prefix="stream_late_")  # outlives the plan
-    events_dir = _sentinel_replay_dir(spark, sf_dir, tmp)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    now = _time.time()
-    # batch 3: empty drain (schema-preserving zero-row file) — evicts
-    # the last fixture window under the sentinel-advanced watermark
-    stage = os.path.join(tmp, "stage_empty")
-    spark.read.parquet(src).limit(0).coalesce(1).write.parquet(stage)
-    (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-    drain = os.path.join(events_dir, "zz-drain.parquet")
-    shutil.copy(part, drain)
-    os.utime(drain, (now + 60, now + 60))
-    # batch 4: the fixture again — every row now below the watermark
+    # batches 1-3: the fixture, the sentinel and one empty drain, which
+    # evicts the last fixture window under the sentinel-advanced watermark
+    events_dir = _staged_sentinel_drain_dir(spark, sf_dir, tmp, _SENTINEL, 1)
+    # batch 4: the fixture again, one minute after the newest staged
+    # file — every row now below the watermark
+    after = 60 + max(
+        os.path.getmtime(os.path.join(events_dir, f)) for f in os.listdir(events_dir)
+    )
     late = os.path.join(events_dir, "zzz-replayed-late.parquet")
-    shutil.copy(src, late)
-    os.utime(late, (now + 120, now + 120))
+    shutil.copy(os.path.join(sf_dir, "events.parquet"), late)
+    os.utime(late, (after, after))
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
     with replay_width(spark):
         run_windowed(
@@ -220,56 +214,6 @@ def q_stream_late_drop_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_files_per_trigger=1,
         )
     return sink.read_committed(spark)
-
-
-def _sentinel_replay_dir(spark: SparkSession, sf_dir: str, tmp: str) -> str:
-    """Stage a two-micro-batch stream dir: the fixture, then one
-    sentinel event 20 minutes past max(ts). The sentinel advances the
-    watermark past every real window/session end; its own window never
-    closes, so it never appears in append-mode output."""
-    # batch 1: the fixture (symlink keeps the fixture file's older
-    # mtime, so the file source orders it before the sentinel)
-    events_dir = stage_replay_dir(sf_dir, tmp, copies=1)
-    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    # batch 2: the sentinel. It must carry the SAME physical ts unit
-    # as the fixture (the driver has shipped both NANOS and MICROS
-    # units across rounds). Built as a JVM-side range(1) projection:
-    # a Python createDataFrame here costs ~5 s per write (the 1-row
-    # write becomes a Python-RDD job — measured, uniform across
-    # schemas), which dominated every sentinel replay's wall-clock.
-    # Epoch arithmetic is integer microseconds end-to-end
-    # (unix_micros/timestamp_micros), so no session-timezone
-    # conversion ever touches the value.
-    from ..sources.tables import events_ts_is_nanos
-
-    ev = load_table(spark, sf_dir, "events")
-    max_us = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
-    late_us = max_us + 20 * 60 * 1_000_000
-    ts_col = (
-        F.lit(late_us * 1000).cast("long")  # raw nanos fixture
-        if events_ts_is_nanos(src)
-        else F.timestamp_micros(F.lit(late_us))
-    )
-    sentinel = spark.range(1).select(
-        F.lit(-1).cast("long").alias("event_id"),
-        ts_col.alias("ts"),
-        F.lit(-1).cast("long").alias("user_id"),
-        F.lit("sentinel").alias("event_type"),
-        F.lit(None).cast("double").alias("value"),
-        F.lit("{}").alias("props"),
-    )
-    # stage the single-row write, then place its part file FLAT in the
-    # stream dir (a directory named *.parquet would confuse the file
-    # source's listing); the fresh copy mtime also orders it after the
-    # symlinked fixture, so it arrives as the second micro-batch
-    stage = os.path.join(tmp, "stage")
-    sentinel.coalesce(1).write.parquet(stage)
-    import glob as _glob
-    import shutil
-
-    (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
-    shutil.copy(part, os.path.join(events_dir, "z-late.parquet"))
-    return events_dir
 
 
 @register(
@@ -371,23 +315,43 @@ def q_stream_outer_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The sentinel's event-time lead over the fixture's max(ts). The
+# watermark it sets (the lead minus a replay's delay of at most 1 min)
+# passes every real 10-minute window, session, 1 h join window and 1 h
+# abandon deadline; the sentinel's own ones never close.
+_SENTINEL_LATE_MINUTES = 120
+
+# One non-joinable sentinel: its event type matches no side filter.
+_SENTINEL = ((-1, -1, "sentinel"),)
+
+
 def _staged_sentinel_drain_dir(
     spark: SparkSession,
     sf_dir: str,
     tmp: str,
     sentinel_rows: tuple[tuple[int, int, str], ...],
-    late_minutes: int = 120,
+    drains: int,
 ) -> str:
-    """Stage a four-micro-batch stream dir: the fixture; one sentinel
-    file of `sentinel_rows` ((event_id, user_id, event_type) triples)
-    stamped `late_minutes` past max(ts) to advance the watermark past
-    every bounded horizon in the fixture; two EMPTY drain files
-    forcing the lagged watermark-driven emissions to flush (append
-    output and timer firings trail the watermark update by a
-    micro-batch; the second drain covers the state-cleanup batch).
-    Sentinel rows are JVM-side literals with integer-microsecond
-    epoch math (see _sentinel_replay_dir for why); file mtimes order
-    the batches under maxFilesPerTrigger=1."""
+    """Stage the replay stream dir that drives watermark emission and
+    late-drop semantics: the fixture; one sentinel file of
+    `sentinel_rows` ((event_id, user_id, event_type) triples) stamped
+    `_SENTINEL_LATE_MINUTES` past max(ts); then `drains` EMPTY drain
+    files. Append output and timer firings trail the watermark update
+    by a micro-batch: with nothing left to read, Spark runs that batch
+    itself, but a replay that stages more files after the sentinel
+    needs a drain to flush first (and a second covers the
+    state-cleanup batch). File mtimes order the batches under
+    maxFilesPerTrigger=1; the fixture symlink keeps the fixture file's
+    older mtime.
+
+    The sentinel must carry the SAME physical ts unit as the fixture
+    (the driver has shipped both NANOS and MICROS units across rounds).
+    Its rows are a JVM-side range(1) projection: a Python
+    createDataFrame here costs ~5 s per write (the 1-row write becomes
+    a Python-RDD job — measured, uniform across schemas). Epoch
+    arithmetic is integer microseconds end-to-end
+    (unix_micros/timestamp_micros), so no session-timezone conversion
+    ever touches the value."""
     import glob as _glob
     import shutil
     import time as _time
@@ -398,9 +362,9 @@ def _staged_sentinel_drain_dir(
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     ev = load_table(spark, sf_dir, "events")
     max_us = ev.agg(F.max(F.unix_micros("ts"))).collect()[0][0]
-    late_us = max_us + late_minutes * 60 * 1_000_000
+    late_us = max_us + _SENTINEL_LATE_MINUTES * 60 * 1_000_000
     ts_col = (
-        F.lit(late_us * 1000).cast("long")
+        F.lit(late_us * 1000).cast("long")  # raw nanos fixture
         if events_ts_is_nanos(src)
         else F.timestamp_micros(F.lit(late_us))
     )
@@ -421,6 +385,9 @@ def _staged_sentinel_drain_dir(
             )
         )
     )
+    # stage each single-file write, then place its part file FLAT in
+    # the stream dir (a directory named *.parquet would confuse the
+    # file source's listing)
     stage = os.path.join(tmp, "stage")
     sentinel.coalesce(1).write.parquet(stage)
     (part,) = _glob.glob(os.path.join(stage, "part-*.parquet"))
@@ -428,13 +395,14 @@ def _staged_sentinel_drain_dir(
     sent = os.path.join(events_dir, "z-sentinel.parquet")
     shutil.copy(part, sent)
     os.utime(sent, (now + 60, now + 60))
-    stage_e = os.path.join(tmp, "stage_empty")
-    spark.read.parquet(src).limit(0).coalesce(1).write.parquet(stage_e)
-    (parte,) = _glob.glob(os.path.join(stage_e, "part-*.parquet"))
-    for i, name in enumerate(("zz-drain.parquet", "zzz-drain2.parquet")):
-        drain = os.path.join(events_dir, name)
-        shutil.copy(parte, drain)
-        os.utime(drain, (now + 120 + 60 * i, now + 120 + 60 * i))
+    if drains:
+        stage_e = os.path.join(tmp, "stage_empty")
+        spark.read.parquet(src).limit(0).coalesce(1).write.parquet(stage_e)
+        (parte,) = _glob.glob(os.path.join(stage_e, "part-*.parquet"))
+        for i in range(drains):
+            drain = os.path.join(events_dir, f"zz-drain{i}.parquet")
+            shutil.copy(parte, drain)
+            os.utime(drain, (now + 120 + 60 * i, now + 120 + 60 * i))
     return events_dir
 
 
@@ -449,7 +417,7 @@ def _run_outer_join_replay(
     the lagged outer-row flush. Returns the committed exactly-once
     sink contents."""
     events_dir = _staged_sentinel_drain_dir(
-        spark, sf_dir, tmp, ((-1, -1, "click"), (-2, -2, "purchase"))
+        spark, sf_dir, tmp, ((-1, -1, "click"), (-2, -2, "purchase")), 2
     )
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
     with replay_width(spark):
@@ -559,9 +527,7 @@ def q_stream_abandoned_clicks_replay(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     tmp = tmpdirs.mkdtemp(prefix="stream_abandon_")  # outlives the plan
-    events_dir = _staged_sentinel_drain_dir(
-        spark, sf_dir, tmp, ((-1, -1, "sentinel"),)
-    )
+    events_dir = _staged_sentinel_drain_dir(spark, sf_dir, tmp, _SENTINEL, 2)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
     with replay_width(spark):
         run_abandoned_clicks(
@@ -622,7 +588,7 @@ GROUP BY user_id, sid
 )
 def q_stream_session_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     tmp = tmpdirs.mkdtemp(prefix="stream_ssn_")  # outlives the returned plan
-    events_dir = _sentinel_replay_dir(spark, sf_dir, tmp)
+    events_dir = _staged_sentinel_drain_dir(spark, sf_dir, tmp, _SENTINEL, 0)
     sink = IdempotentParquetSink(os.path.join(tmp, "out"))
     with replay_width(spark):
         run_session_windowed(

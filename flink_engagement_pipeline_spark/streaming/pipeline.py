@@ -26,7 +26,11 @@ fan-out + windowed aggregation — as one micro-batch pipeline:
   sink count, and all sinks see the same rows (the reference runs one
   Flink job with multiple sinks for the same reason);
 - windowed aggregation: event-time window + watermark in append mode
-  (A1/T2/T3) as a separate query over the same stream.
+  (A1/T2/T3) as a separate query over the same stream;
+- stream-stream join: one event-time interval join
+  (``click_purchase_join``) serving the inner, left-outer and
+  full-outer forms, its state bounded by the watermark that also
+  drives the outer null emission.
 """
 
 from __future__ import annotations
@@ -297,11 +301,20 @@ def run_windowed(
 
 
 def click_purchase_join(
-    clicks: DataFrame, purchases: DataFrame, watermark: str = DEFAULT_WATERMARK
+    clicks: DataFrame,
+    purchases: DataFrame,
+    watermark: str = DEFAULT_WATERMARK,
+    how: str = "inner",
 ) -> DataFrame:
-    """Stream-stream event-time inner join (beyond the reference, which
-    has only the stream-static lookup join J1): purchases within one
-    hour after a click by the same user.
+    """Stream-stream event-time interval join (beyond the reference,
+    which has only the stream-static lookup join J1): purchases within
+    one hour after a click by the same user, ``[click_ts, click_ts +
+    1h)``. ``how`` is "inner", "left_outer" (every click emits, once
+    with NULL purchase fields if no purchase matches) or "full_outer"
+    (a purchase no click preceded also emits, with NULL click fields);
+    any other ``how`` raises ValueError. ``user_id`` is
+    ``coalesce(c_user, p_user)``, which under the inner join is
+    ``c_user``, since the condition requires ``c_user = p_user``.
 
     Works identically on batch and streaming frames. In streaming both
     sides carry watermarks and the join condition bounds the time
@@ -310,7 +323,17 @@ def click_purchase_join(
     range bound, stream-stream join state grows forever. That state
     bound IS the 100 TB design; the equi half (user_id) drives the
     shuffle partitioning exactly as in the batch interval join.
+
+    An unmatched click is provably unmatched only when the watermark
+    passes the end of its match window, so outer null rows emit with
+    that delay, driven by the SAME watermark that expires the state (an
+    unmatched purchase's window is [p_ts - 1h, p_ts], so its null row
+    needs only the same horizon). Matched rows emit as matches arrive.
     """
+    if how not in ("inner", "left_outer", "full_outer"):
+        raise ValueError(
+            f"how must be 'inner', 'left_outer' or 'full_outer', got {how!r}"
+        )
     # withWatermark is a documented no-op on batch frames, so the same
     # code path serves the batch oracle and the stream
     c = clicks.select(
@@ -329,10 +352,10 @@ def click_purchase_join(
         (F.col("c_user") == F.col("p_user"))
         & (F.col("purchase_ts") >= F.col("click_ts"))
         & (F.col("purchase_ts") < F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        "inner",
+        how,
     )
     return joined.select(
-        F.col("c_user").alias("user_id"),
+        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
         "click_id",
         "click_ts",
         "purchase_id",
@@ -362,60 +385,6 @@ def run_session_windowed(
     sink.close()
 
 
-def click_purchase_left_join(
-    clicks: DataFrame,
-    purchases: DataFrame,
-    watermark: str = DEFAULT_WATERMARK,
-    how: str = "leftOuter",
-) -> DataFrame:
-    """Stream-stream event-time OUTER join — the null-emitting half
-    of the interval-join family (Flink's interval join supports outer
-    variants; :func:`click_purchase_join` covers inner only): every
-    click row emits, paired with each purchase within one hour after
-    it, or once with NULL purchase fields if none arrives. With
-    ``how="fullOuter"`` the right side is null-completed symmetrically
-    (a purchase no click preceded emits with NULL click fields).
-
-    In streaming, an unmatched click is provably unmatched only when
-    the watermark passes the end of its match window (click_ts + 1h),
-    so outer null rows emit with that delay — and the emission is
-    driven by the SAME watermark that expires buffered state, which
-    is why the outer forms stay bounded-state at 100 TB exactly like
-    the inner one (an unmatched purchase's window is [p_ts - 1h,
-    p_ts], so its null row needs only the same horizon). Matched rows
-    emit as matches arrive, unchanged.
-
-    On batch frames this is the plain outer interval join (withWatermark
-    is a no-op), so one code path serves the stream and the oracle.
-    """
-    c = clicks.select(
-        F.col("user_id").alias("c_user"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts").alias("click_ts"),
-    ).withWatermark("click_ts", watermark)
-    p = purchases.select(
-        F.col("user_id").alias("p_user"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts").alias("purchase_ts"),
-        F.col("value").alias("purchase_value"),
-    ).withWatermark("purchase_ts", watermark)
-    joined = c.join(
-        p,
-        (F.col("c_user") == F.col("p_user"))
-        & (F.col("purchase_ts") >= F.col("click_ts"))
-        & (F.col("purchase_ts") < F.col("click_ts") + F.expr("INTERVAL 1 HOUR")),
-        how,
-    )
-    return joined.select(
-        F.coalesce(F.col("c_user"), F.col("p_user")).alias("user_id"),
-        "click_id",
-        "click_ts",
-        "purchase_id",
-        "purchase_ts",
-        "purchase_value",
-    )
-
-
 def run_stream_stream_join(
     spark: SparkSession,
     events_dir: str,
@@ -429,19 +398,14 @@ def run_stream_stream_join(
     (``how``: "inner", "left_outer" or "full_outer"). The outer forms
     need ``max_files_per_trigger=1`` so the watermark-advancing
     sentinel and the drain files arrive as separate micro-batches.
-    Raises ValueError for any other ``how``, before any Spark work."""
-    outer = {"left_outer": "leftOuter", "full_outer": "fullOuter"}
-    if how != "inner" and how not in outer:
-        raise ValueError(
-            f"how must be 'inner', 'left_outer' or 'full_outer', got {how!r}"
-        )
+    Raises ValueError for any other ``how``, before the stream
+    starts."""
     ev = read_events_stream(spark, events_dir, max_files_per_trigger)
-    clicks = ev.filter(F.col("event_type") == "click")
-    purchases = ev.filter(F.col("event_type") == "purchase")
-    if how == "inner":
-        out = click_purchase_join(clicks, purchases)
-    else:
-        out = click_purchase_left_join(clicks, purchases, how=outer[how])
+    out = click_purchase_join(
+        ev.filter(F.col("event_type") == "click"),
+        ev.filter(F.col("event_type") == "purchase"),
+        how=how,
+    )
     run_stream(out, sink.write_batch, checkpoint_dir)
     sink.close()
 

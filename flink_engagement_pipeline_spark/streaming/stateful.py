@@ -1,21 +1,28 @@
-"""Custom stateful streaming operator via applyInPandasWithState
+"""Custom stateful streaming operators via applyInPandasWithState
 (SURVEY.md §2.11: the extension mechanism for operators Structured
 Streaming lacks; this is the engine's pattern for "keep per-key state
 across micro-batches").
 
-The operator here is a running per-user engagement accumulator: state
-= (n_events, total_value) per user_id, updated every micro-batch,
-emitting the refreshed totals for users seen in that batch — the
-stateful generalization of the Redis ZINCRBY leaderboard (reference
-src/process.py:92), kept inside the engine instead of an external
-store.
+Two operators live here:
+
+- ``running_user_totals_cents``: a running per-user engagement
+  accumulator, state = (n_events, total_cents) per user_id, updated
+  every micro-batch and emitting the refreshed totals for users seen
+  in that batch — the stateful generalization of the Redis ZINCRBY
+  leaderboard (reference src/process.py:92), kept inside the engine
+  instead of an external store. State is integer cents, so the totals
+  after any replay schedule are exact and the registered
+  ``stream_stateful_replay`` hash-matches a SQL oracle.
+- ``abandoned_clicks``: event-time TIMER absence detection (Flink
+  CEP's notFollowedBy + within).
 
 Scale notes: state is partitioned by the grouping key across
 executors (RocksDB-backed state store in production via
 ``spark.sql.streaming.stateStore.providerClass``); the pandas
 function sees one Arrow batch per key group, never row-at-a-time
 Python. GroupStateTimeout would evict idle keys for unbounded key
-spaces — the fixture replay is bounded, so no timeout here.
+spaces — the fixture replay is bounded, so the accumulator sets no
+timeout.
 """
 
 from __future__ import annotations
@@ -29,129 +36,12 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
-    DoubleType,
     LongType,
     StructField,
     StructType,
 )
 
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("n_events", LongType()),
-        StructField("total_value", DoubleType()),
-    ]
-)
-
-
-def _update(
-    key: tuple[Any, ...],
-    batches: Iterator[pd.DataFrame],
-    state: GroupState,
-) -> Iterator[pd.DataFrame]:
-    n, total = state.get if state.exists else (0, 0.0)
-    for pdf in batches:
-        vals = pdf["value"].dropna()
-        n += len(pdf)
-        total += float(vals.sum()) if len(vals) else 0.0
-    state.update((n, total))
-    yield pd.DataFrame(
-        {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-    )
-
-
-def running_user_totals(events: DataFrame) -> DataFrame:
-    """Streaming: per-user running (count, sum) across micro-batches."""
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _update,
-            outputStructType=OUTPUT_SCHEMA,
-            stateStructType=STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
-class RunningTotalsProcessor:
-    """Spark 4 ``StatefulProcessor`` form of the same running-totals
-    operator (``transformWithStateInPandas``): the successor API to
-    ``applyInPandasWithState`` with explicit typed state handles
-    (ValueState/ListState/MapState), timers, and TTL support — the
-    engine keeps BOTH forms because the reference's per-key
-    accumulator (Redis ZINCRBY, reference src/process.py:92) is the
-    semantics, and the processor API is the idiomatic Spark 4 home
-    for it.
-
-    Scale: identical state-partitioning story to
-    ``running_user_totals`` — per-key ValueState sharded across
-    executors, RocksDB-backed in production, Arrow-batched input.
-    """
-
-    def init(self, handle) -> None:  # StatefulProcessorHandle
-        self._totals = handle.getValueState("totals", STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):
-        prev = self._totals.get()
-        n, total = prev if prev is not None else (0, 0.0)
-        for pdf in rows:
-            vals = pdf["value"].dropna()
-            n += len(pdf)
-            total += float(vals.sum()) if len(vals) else 0.0
-        self._totals.update((n, total))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-        )
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        return iter(())
-
-    def handleInitialState(self, key, initialState, timerValues) -> None:
-        pass
-
-    def close(self) -> None:
-        pass
-
-
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Streaming per-user running (count, sum) via the Spark 4
-    ``transformWithStateInPandas`` StatefulProcessor API.
-
-    Runtime dependency: the TWS state server speaks protobuf to the
-    Python worker, so this path needs ``google.protobuf`` installed
-    (its pytest skips where absent); ``running_user_totals`` is the
-    dependency-free equivalent."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    # Subclassing at call time keeps the module importable even if a
-    # future pyspark moves the ABC; the processor itself is duck-typed.
-    proc = type(
-        "_RunningTotals", (RunningTotalsProcessor, StatefulProcessor), {}
-    )()
-    return (
-        events.select("user_id", "value")
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            statefulProcessor=proc,
-            outputStructType=OUTPUT_SCHEMA,
-            outputMode="update",
-            timeMode="none",
-        )
-    )
-
-
-# ---------------------------------------------------------------------------
-# integer-cents twin (driver-oracle-able)
-# ---------------------------------------------------------------------------
+from ..operators.windows import parse_interval_us
 
 CENTS_OUTPUT_SCHEMA = StructType(
     [
@@ -199,11 +89,11 @@ def _update_cents(
 
 def running_user_totals_cents(events: DataFrame) -> DataFrame:
     """Streaming per-user running (count, cent-exact sum) across
-    micro-batches — the float accumulator's integer twin. Because
-    state is integer cents, the value after ANY replay schedule is a
-    pure function of the multiset of inputs, which is what lets the
-    registered `stream_stateful_replay` query hash-match a batch SQL
-    oracle instead of settling for a stream==batch pytest."""
+    micro-batches. Because state is integer cents, the value after ANY
+    replay schedule is a pure function of the multiset of inputs, which
+    is what lets the registered `stream_stateful_replay` query
+    hash-match a batch SQL oracle instead of settling for a
+    stream==batch pytest."""
     return (
         events.select("user_id", "value")
         .groupBy("user_id")
@@ -333,45 +223,6 @@ def _abandon(
         )
 
 
-_DELAY_UNIT_US = {
-    "microsecond": 1,
-    "millisecond": 1_000,
-    "second": 1_000_000,
-    "minute": 60_000_000,
-    "hour": 3_600_000_000,
-    "day": 86_400_000_000,
-    "week": 604_800_000_000,
-}
-
-
-def _parse_delay_us(delay: str) -> int:
-    """Parse a Spark watermark delay-threshold string ('10 seconds',
-    '1 hour 30 minutes') to microseconds — the subset of the
-    CalendarInterval grammar watermarks accept.
-
-    The WHOLE string must match (r9 ADVICE): an unanchored findall
-    silently misparsed decimal delays ('90.5 minutes' -> 5 minutes),
-    so the <=1h guard downstream could mis-evaluate a string Spark
-    itself might accept differently — anything with leftover
-    characters (a '.', a stray token) is rejected loudly instead."""
-    import re
-
-    m = re.fullmatch(r"\s*(?:\d+\s*[a-zA-Z]+\s*)+", delay)
-    if m is None:
-        raise ValueError(
-            f"unparseable watermark delay {delay!r}: expected one or "
-            "more '<integer> <unit>' terms (decimals and other tokens "
-            "are rejected rather than silently dropped)"
-        )
-    total = 0
-    for num, unit in re.findall(r"(\d+)\s*([a-zA-Z]+)", delay):
-        unit = unit.lower().rstrip("s")
-        if unit not in _DELAY_UNIT_US:
-            raise ValueError(f"unrecognized delay unit {unit!r} in {delay!r}")
-        total += int(num) * _DELAY_UNIT_US[unit]
-    return total
-
-
 def abandoned_clicks(events: DataFrame, watermark: str = "0 seconds") -> DataFrame:
     """Streaming funnel-abandonment detector — the ABSENCE member of
     the CEP family (Flink's notFollowedBy + within): clicks with NO
@@ -402,7 +253,7 @@ def abandoned_clicks(events: DataFrame, watermark: str = "0 seconds") -> DataFra
     delay, a click arriving later than 1 h after its cancelling
     purchase would find the purchase already evicted and be falsely
     emitted. Enforced here, at the public API (ADVICE r8)."""
-    delay_us = _parse_delay_us(watermark)
+    delay_us = parse_interval_us(watermark)
     if delay_us > ABANDON_WINDOW_US:
         raise ValueError(
             f"abandoned_clicks: watermark delay {watermark!r} exceeds the "

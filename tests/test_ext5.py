@@ -211,7 +211,7 @@ def test_stream_outer_join_emits_null_rows(spark, sf_dir):
     batch left interval join row-for-row."""
     from flink_engagement_pipeline_spark.sources.tables import load_table
     from flink_engagement_pipeline_spark.streaming.pipeline import (
-        click_purchase_left_join,
+        click_purchase_join,
     )
 
     got = REGISTRY["stream_outer_join_replay"].spark(spark, sf_dir).collect()
@@ -221,9 +221,10 @@ def test_stream_outer_join_emits_null_rows(spark, sf_dir):
         assert r["purchase_ts"] is None and r["purchase_value"] is None
 
     ev = load_table(spark, sf_dir, "events")
-    batch = click_purchase_left_join(
+    batch = click_purchase_join(
         ev.filter(F.col("event_type") == "click"),
         ev.filter(F.col("event_type") == "purchase"),
+        how="left_outer",
     ).select(
         "user_id",
         "click_id",
@@ -252,7 +253,7 @@ def test_stream_full_outer_join_emits_both_null_sides(spark, sf_dir):
     outer interval join row-for-row."""
     from flink_engagement_pipeline_spark.sources.tables import load_table
     from flink_engagement_pipeline_spark.streaming.pipeline import (
-        click_purchase_left_join,
+        click_purchase_join,
     )
 
     got = (
@@ -266,10 +267,10 @@ def test_stream_full_outer_join_emits_both_null_sides(spark, sf_dir):
         assert r["click_ts"] is None and r["user_id"] is not None
 
     ev = load_table(spark, sf_dir, "events")
-    batch = click_purchase_left_join(
+    batch = click_purchase_join(
         ev.filter(F.col("event_type") == "click"),
         ev.filter(F.col("event_type") == "purchase"),
-        how="fullOuter",
+        how="full_outer",
     ).select(
         "user_id",
         F.coalesce("click_id", F.lit(-1).cast("long")).alias("click_id"),
@@ -756,8 +757,10 @@ def test_abandoned_clicks_rejects_oversized_watermark_delay(spark):
     already evicted. The public API must refuse such a config."""
     import pytest as _pytest
 
+    from flink_engagement_pipeline_spark.operators.windows import (
+        parse_interval_us,
+    )
     from flink_engagement_pipeline_spark.streaming.stateful import (
-        _parse_delay_us,
         abandoned_clicks,
     )
 
@@ -772,8 +775,8 @@ def test_abandoned_clicks_rejects_oversized_watermark_delay(spark):
     # boundary and compound forms accepted
     abandoned_clicks(stream, watermark="1 hour")
     abandoned_clicks(stream, watermark="30 minutes 1800 seconds")
-    assert _parse_delay_us("1 hour") == 3_600_000_000
-    assert _parse_delay_us("2 minutes 5 seconds") == 125_000_000
+    assert parse_interval_us("1 hour") == 3_600_000_000
+    assert parse_interval_us("2 minutes 5 seconds") == 125_000_000
 
 
 # ---------------------------------------------------------------------------
@@ -918,7 +921,7 @@ def test_dynamic_session_stream_matches_batch(spark, sf_dir, tmp_path):
     )
 
     events_dir = _staged_sentinel_drain_dir(
-        spark, sf_dir, str(tmp_path), ((-1, -1, "sentinel"),)
+        spark, sf_dir, str(tmp_path), ((-1, -1, "sentinel"),), 2
     )
     gap = F.when(
         F.col("event_type") == "purchase", F.lit("30 minutes")

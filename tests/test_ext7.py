@@ -684,16 +684,16 @@ def test_media_dedup_survivors_policy(spark, sf_dir):
 def test_parse_delay_rejects_partial_matches():
     """'90.5 minutes' must raise, not silently parse as 5 minutes
     (the r9 ADVICE finding); valid compound strings still parse."""
-    from flink_engagement_pipeline_spark.streaming.stateful import (
-        _parse_delay_us,
+    from flink_engagement_pipeline_spark.operators.windows import (
+        parse_interval_us,
     )
 
-    assert _parse_delay_us("1 hour 30 minutes") == 5_400_000_000
-    assert _parse_delay_us("90 minutes") == 5_400_000_000
-    assert _parse_delay_us("10 seconds") == 10_000_000
+    assert parse_interval_us("1 hour 30 minutes") == 5_400_000_000
+    assert parse_interval_us("90 minutes") == 5_400_000_000
+    assert parse_interval_us("10 seconds") == 10_000_000
     for bad in ("90.5 minutes", "1.5 hours", "5 minutes max", "", "soon"):
         with pytest.raises(ValueError):
-            _parse_delay_us(bad)
+            parse_interval_us(bad)
 
 
 def test_knn_graph_lazy_guard(spark, sf_dir):

@@ -510,37 +510,6 @@ def test_simhash_pairs_recall_vs_jaccard(docs):
     assert len(got) < n * (n - 1) / 2 * 0.05  # it prunes
 
 
-def test_incremental_dedup_matches_full_rebuild(docs):
-    """Incremental ingest dedup (new batch vs a persisted corpus band
-    index) must find EXACTLY the pairs a full-corpus LSH+verify run
-    finds among pairs whose larger id is in the new batch — building
-    the index once and appending is lossless vs rebuilding."""
-    split = 400
-    corpus = docs.filter(F.col("doc_id") < split)
-    batch = docs.filter(F.col("doc_id") >= split)
-    idx = ld.minhash_bands(corpus)
-    got = {
-        (r["doc_id"], r["dup_of"], r["jaccard"])
-        for r in ld.incremental_minhash_dedup(batch, idx, corpus).collect()
-    }
-    # full rebuild: LSH candidates on the whole corpus, exact-verified
-    cand_full = {
-        (r["doc_a"], r["doc_b"])
-        for r in ld.lsh_candidate_pairs(docs).collect()
-    }
-    exact = {
-        (r["doc_a"], r["doc_b"]): r["jaccard"]
-        for r in ld.ngram_jaccard_pairs(docs, threshold=0.5).collect()
-    }
-    expect = {
-        (b, a, exact[(a, b)])
-        for (a, b) in cand_full
-        if b >= split and (a, b) in exact
-    }
-    assert got == expect
-    assert got, "fixture should contain pairs touching the new batch"
-
-
 def test_lsh_oversized_bucket_collapses_to_chain(spark):
     """An exact-duplicate class LARGER than max_bucket_size must not
     lose its pairs (round-5 advisory: dropping saturated buckets shed

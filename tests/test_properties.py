@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import datetime
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from flink_engagement_pipeline_spark.operators.asof import asof_join_backward
@@ -165,12 +165,14 @@ hop_events = st.lists(
 )
 
 
-@given(rows=hop_events)
+@given(rows=hop_events, slide_s=st.sampled_from([5, 10]))
+@example(rows=[(0, 7, 1)], slide_s=10)
 @_SETTINGS
-def test_hop_two_phase_property(spark, rows):
+def test_hop_two_phase_property(spark, rows, slide_s):
     """The two-phase single-shuffle HOP plan must equal the brute-force
     definition: an event at t belongs to every window starting at
-    floor(t/slide)*slide - k*slide, k in [0, size/slide)."""
+    floor(t/slide)*slide - k*slide, k in [0, size/slide). Slides of
+    5 s and 10 s both run, so the plan must honour its ``slide``."""
     from decimal import Decimal
 
     from flink_engagement_pipeline_spark.operators.windows import (
@@ -182,7 +184,7 @@ def test_hop_two_phase_property(spark, rows):
          for i, (key, t, v) in enumerate(rows)],
         "event_id long, user_id long, ts timestamp, value double, event_type string, props string",
     )
-    size_s, slide_s = 20, 5
+    size_s = 20
     got = {
         (r["window_start"], r["user_id"]): Decimal(str(r["engagement_sum"]))
         for r in hop_engagement_sum(
@@ -201,6 +203,58 @@ def test_hop_two_phase_property(spark, rows):
     assert set(got) == set(expect)
     for k in expect:
         assert got[k] == expect[k], k
+
+
+def test_hop_rejects_size_not_a_multiple_of_slide(spark):
+    """Slice pre-aggregation is lossless only when every window is a
+    whole number of slides, so any other size/slide pair is refused."""
+    import pytest
+
+    from flink_engagement_pipeline_spark.operators.windows import (
+        hop_engagement_sum,
+    )
+
+    df = spark.createDataFrame(
+        [(0, 1, _ts(0), 1.0, "view", "{}")],
+        "event_id long, user_id long, ts timestamp, value double, event_type string, props string",
+    )
+    with pytest.raises(ValueError, match="multiple of slide"):
+        hop_engagement_sum(df, size="20 seconds", slide="15 seconds")
+
+
+def test_cumulate_hour_span_matches_brute_force(spark):
+    """CUMULATE with an hour-unit max size: expanding windows
+    [span, span + j*10min) for j = 1..6 over each hour span must hold
+    exactly the events before their end."""
+    from decimal import Decimal
+
+    from flink_engagement_pipeline_spark.operators.windows import (
+        cumulate_engagement_sum,
+    )
+
+    rows = [(1, 0, 1.25), (1, 599, 2.0), (1, 600, 0.5), (2, 3599, 3.0), (1, 3600, 4.0)]
+    df = spark.createDataFrame(
+        [(i, key, _ts(0) + datetime.timedelta(seconds=t), v, "view", "{}")
+         for i, (key, t, v) in enumerate(rows)],
+        "event_id long, user_id long, ts timestamp, value double, event_type string, props string",
+    )
+    got = {
+        (r["window_start"], r["window_end"], r["user_id"]): Decimal(str(r["engagement_sum"]))
+        for r in cumulate_engagement_sum(
+            df, max_size="1 hour", step="10 minutes"
+        ).collect()
+    }
+    expect: dict = {}
+    for key, t, v in rows:
+        span = (t // 3600) * 3600
+        for j in range((t % 3600) // 600 + 1, 7):
+            k = (
+                _ts(0) + datetime.timedelta(seconds=span),
+                _ts(0) + datetime.timedelta(seconds=span + j * 600),
+                key,
+            )
+            expect[k] = expect.get(k, Decimal(0)) + Decimal(str(v))
+    assert got == expect
 
 
 # small word alphabet forces shared shingles between random docs

@@ -1,63 +1,12 @@
-"""Custom stateful streaming operator + the SQL front door."""
+"""The SQL front door: spark.sql over registered temp views equals the
+DataFrame-API queries. The running-totals stateful operator is checked
+by the registered stream_stateful_replay (its oracle requires exactly
+2x the batch aggregate, so state must survive the batch boundary) and
+by tests/test_streaming.py::test_rocksdb_state_store_cents_accumulator."""
 
 from __future__ import annotations
 
-import shutil
-
-import pytest
-from pyspark.sql import functions as F
-
-from flink_engagement_pipeline_spark.sources.tables import load_table, register_views
-from flink_engagement_pipeline_spark.streaming import pipeline as sp
-from flink_engagement_pipeline_spark.streaming import sinks as sk
-from flink_engagement_pipeline_spark.streaming.stateful import running_user_totals
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_stateful_running_totals_across_batches(spark, tmp_path):
-    """State must survive micro-batch boundaries: two files forced into
-    two batches via maxFilesPerTrigger; the last emitted totals per
-    user must equal the global batch aggregation."""
-    d = tmp_path / "stream-in"
-    d.mkdir()
-    shutil.copy(f"{SF}/events.parquet", d / "a.parquet")
-    shutil.copy(f"{SF}/events.parquet", d / "b.parquet")
-
-    # force 2 micro-batches so the second must read back saved state
-    stream = sp.read_events_stream(spark, str(d), max_files_per_trigger=1)
-    totals = running_user_totals(stream)
-    mem = sk.MemorySink()
-    (
-        totals.writeStream.foreachBatch(
-            lambda df, bid: mem.write_batch(df, bid)
-        )
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    assert len(mem.batches) >= 2, "expected multiple micro-batches"
-    # last emission per user wins (update mode)
-    final: dict = {}
-    for _, rows in sorted(mem.batches):
-        for r in rows:
-            final[r["user_id"]] = (r["n_events"], r["total_value"])
-
-    events = load_table(spark, SF, "events")
-    doubled = events.unionByName(events)
-    expect = {
-        r["user_id"]: (r["n"], r["s"])
-        for r in doubled.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert set(final) == set(expect)
-    for uid, (n, s) in expect.items():
-        fn, fs = final[uid]
-        assert fn == n, f"user {uid} count {fn} != {n}"
-        assert fs == pytest.approx(s, rel=1e-9)
+from flink_engagement_pipeline_spark.sources.tables import register_views
 
 
 def test_sql_front_door_matches_dataframe(spark, sf_dir):
@@ -109,53 +58,3 @@ def test_sql_front_door_window_agg(spark, sf_dir):
     assert sorted(map(tuple, sql_df.collect())) == sorted(
         map(tuple, df_api.collect())
     )
-
-
-def test_tws_processor_matches_apply_in_pandas_with_state(spark, tmp_path):
-    """The Spark 4 StatefulProcessor (transformWithStateInPandas) form
-    must produce the same final per-user totals as the
-    applyInPandasWithState form and the batch aggregation.
-
-    Requires protobuf: Spark's TWS state server speaks protobuf to the
-    Python worker; the container ships pyspark without it, so this
-    test runs wherever the engine actually deploys and skips here."""
-    pytest.importorskip("google.protobuf")
-    from flink_engagement_pipeline_spark.streaming.stateful import (
-        running_user_totals_tws,
-    )
-
-    d = tmp_path / "stream-in"
-    d.mkdir()
-    shutil.copy(f"{SF}/events.parquet", d / "a.parquet")
-    shutil.copy(f"{SF}/events.parquet", d / "b.parquet")
-
-    stream = sp.read_events_stream(spark, str(d), max_files_per_trigger=1)
-    totals = running_user_totals_tws(stream)
-    mem = sk.MemorySink()
-    (
-        totals.writeStream.foreachBatch(lambda df, bid: mem.write_batch(df, bid))
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ckpt-tws"))
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-    assert len(mem.batches) >= 2, "expected multiple micro-batches"
-    final: dict = {}
-    for _, rows in sorted(mem.batches):
-        for r in rows:
-            final[r["user_id"]] = (r["n_events"], r["total_value"])
-
-    events = load_table(spark, SF, "events")
-    doubled = events.unionByName(events)
-    expect = {
-        r["user_id"]: (r["n"], r["s"])
-        for r in doubled.groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.sum("value").alias("s"))
-        .collect()
-    }
-    assert set(final) == set(expect)
-    for uid, (n, s) in expect.items():
-        fn, fs = final[uid]
-        assert fn == n, f"user {uid} count {fn} != {n}"
-        assert fs == pytest.approx(s, rel=1e-9)

@@ -13,11 +13,17 @@ from pyspark.sql import functions as F
 
 from flink_engagement_pipeline_spark.operators.dedup import latest_per_key
 from flink_engagement_pipeline_spark.operators.enrich import enrich_events
+from flink_engagement_pipeline_spark.session import pinned_conf
 from flink_engagement_pipeline_spark.sources.tables import load_table
 from flink_engagement_pipeline_spark.streaming import pipeline as sp
 from flink_engagement_pipeline_spark.streaming import sinks as sk
 
 SF = "/root/testdata/sf0.001"
+
+STATE_STORE_PROVIDER = "spark.sql.streaming.stateStore.providerClass"
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
 
 
 @pytest.fixture()
@@ -967,23 +973,19 @@ def test_rocksdb_state_store_stream_equals_batch(spark, tmp_path):
     and its append-mode output still equals the batch aggregation.
     Spark 4 ships the provider built in; only the conf changes, which
     is exactly the point — operator code is state-backend-agnostic."""
-    key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(key, None)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    from flink_engagement_pipeline_spark.plans.queries_stream import (
+        _SENTINEL,
+        _staged_sentinel_drain_dir,
     )
-    try:
-        # fixture + far-future sentinel (unit-aware staging shared
-        # with the registered stream replays) so the watermark closes
-        # every real window
-        from flink_engagement_pipeline_spark.plans.queries_stream import (
-            _sentinel_replay_dir,
-        )
 
-        stream_dir = _sentinel_replay_dir(spark, SF, str(tmp_path / "rocks"))
-        sink = sk.IdempotentParquetSink(str(tmp_path / "rocks-out"))
+    # fixture + far-future sentinel (unit-aware staging shared with the
+    # registered stream replays) so the watermark closes every real
+    # window
+    stream_dir = _staged_sentinel_drain_dir(
+        spark, SF, str(tmp_path / "rocks"), _SENTINEL, 0
+    )
+    sink = sk.IdempotentParquetSink(str(tmp_path / "rocks-out"))
+    with pinned_conf(spark, STATE_STORE_PROVIDER, ROCKSDB_PROVIDER):
         sp.run_windowed(
             spark,
             stream_dir,
@@ -991,12 +993,7 @@ def test_rocksdb_state_store_stream_equals_batch(spark, tmp_path):
             checkpoint_dir=str(tmp_path / "rocks-ckpt"),
             max_files_per_trigger=1,
         )
-        got = sorted(map(tuple, sink.read_committed(spark).collect()))
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
+    got = sorted(map(tuple, sink.read_committed(spark).collect()))
     from flink_engagement_pipeline_spark.functions.exact import dec
 
     ev = load_table(spark, SF, "events")
@@ -1020,61 +1017,23 @@ def test_rocksdb_state_store_cents_accumulator(spark, tmp_path):
     the RocksDB state store provider: per-key GroupState round-trips
     through RocksDB across micro-batches, and a two-batch full replay
     still yields exactly 2x the batch aggregate for every user."""
-    import os
-
-    key = "spark.sql.streaming.stateStore.providerClass"
-    saved = spark.conf.get(key, None)
-    part_key = "spark.sql.shuffle.partitions"
-    saved_parts = spark.conf.get(part_key)
-    spark.conf.set(
-        key,
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
+    from flink_engagement_pipeline_spark.streaming.stateful import (
+        running_user_totals_cents,
     )
-    spark.conf.set(part_key, "8")
-    try:
-        from flink_engagement_pipeline_spark.streaming.stateful import (
-            running_user_totals_cents,
-        )
 
-        d = tmp_path / "rocks-cents-in"
-        d.mkdir()
-        src = os.path.abspath(f"{SF}/events.parquet")
-        os.symlink(src, d / "a.parquet")
-        os.symlink(src, d / "b.parquet")
-        sink = sk.IdempotentParquetSink(str(tmp_path / "rocks-cents-out"))
-        stream = sp.read_events_stream(spark, str(d), max_files_per_trigger=1)
-        totals = running_user_totals_cents(
-            stream.filter(F.col("user_id").isNotNull())
+    stream_dir = sp.stage_replay_dir(SF, str(tmp_path / "rocks-cents-in"))
+    sink = sk.IdempotentParquetSink(str(tmp_path / "rocks-cents-out"))
+    stream = sp.read_events_stream(spark, stream_dir, max_files_per_trigger=1)
+    totals = running_user_totals_cents(stream.filter(F.col("user_id").isNotNull()))
+    rocksdb = pinned_conf(spark, STATE_STORE_PROVIDER, ROCKSDB_PROVIDER)
+    with rocksdb, sp.replay_width(spark):
+        sp.run_stream(
+            totals, sink.write_batch, str(tmp_path / "rocks-cents-ckpt"), "update"
         )
-        q = (
-            totals.writeStream.outputMode("update")
-            .foreachBatch(lambda df, bid: sink.write_batch(df, bid))
-            .option(
-                "checkpointLocation", str(tmp_path / "rocks-cents-ckpt")
-            )
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    finally:
-        if saved is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, saved)
-        spark.conf.set(part_key, saved_parts)
-    import glob
-
-    last = max(
-        int(os.path.basename(os.path.dirname(m)).split("=")[1])
-        for m in glob.glob(
-            os.path.join(sink.out_dir, "*", "_COMMITTED")
-        )
-    )
     got = {
         r["user_id"]: (r["n_events"], r["total_cents"])
         for r in spark.read.option("pathGlobFilter", "*.parquet")
-        .parquet(os.path.join(sink.out_dir, f"batch_id={last}"))
+        .parquet(sink.committed_paths()[-1])
         .collect()
     }
     cents = F.when(
